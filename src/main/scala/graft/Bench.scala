@@ -1,26 +1,42 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
+  SparkListenerStageCompleted, SparkListenerTaskEnd}
 object Bench {
+  /** Per-query job/stage/task counts (ROADMAP O1; Drizzle, SOSP'17: with
+    * small tasks the per-job coordination cost dominates, so job counts
+    * belong in the standing record). Jobs are attributed through the job
+    * group the bench sets around each query; untagged jobs (warm-up,
+    * scale classification, earlier passes) are not counted. Events
+    * arrive on the single listener-bus thread; read [[counts]] only
+    * after draining the bus. */
+  private final class Profile extends SparkListener {
+    private val stageGroup = scala.collection.mutable.HashMap.empty[Int, String]
+    private val acc = scala.collection.mutable.HashMap.empty[String, Array[Long]]
+    private def bump(group: String, i: Int): Unit =
+      acc.getOrElseUpdate(group, new Array[Long](3))(i) += 1
+    override def onJobStart(j: SparkListenerJobStart): Unit = synchronized {
+      Option(j.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+        .foreach { g =>
+          bump(g, 0)
+          j.stageInfos.foreach(si => stageGroup(si.stageId) = g)
+        }
+    }
+    override def onStageCompleted(s: SparkListenerStageCompleted): Unit =
+      synchronized { stageGroup.get(s.stageInfo.stageId).foreach(bump(_, 1)) }
+    override def onTaskEnd(t: SparkListenerTaskEnd): Unit =
+      synchronized { stageGroup.get(t.stageId).foreach(bump(_, 2)) }
+    /** (jobs, stages, tasks) of one job group, zeros if it ran none. */
+    def counts(group: String): (Long, Long, Long) = synchronized {
+      val c = acc.getOrElse(group, new Array[Long](3))
+      (c(0), c(1), c(2))
+    }
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // AQE coalescing floor (r21, guide §2.2/§2.5): with
-    // parallelismFirst (the default) AQE coalesces a shuffle whose
-    // total bytes are small to ~1 MB partitions — collapsing
-    // compute-dense stages (candidate-pair verification, signature
-    // folds) onto one core even though bytes/row vastly understate
-    // work/row. Lowering the floor lets such stages keep the
-    // cluster's parallelism; at production scale partitions are
-    // hundreds of MB and the floor never binds (scale-neutral).
-    // Parameterized for A/B runs; the default is the measured knee.
-    val minPart = sys.env.getOrElse("SPARK_GRAFT_MIN_PART", "64k")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", minPart)
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new graft.functions.GraftExtensions)
-      .getOrCreate()
+    // session shape (incl. the 64k AQE coalescing floor) and core count
+    // both come from GraftSession — the one the oracle gate runs under
+    val spark = GraftSession.local(GraftSession.cores)
     // ERROR, not WARN (r22): the driver keeps only a bounded tail of the
     // bench output, and the localCheckpoint-unpersist WARN lines (one per
     // released CC round) were crowding the per-query JSON lines out of
@@ -66,9 +82,15 @@ object Bench {
     // let the median-of-3 silently discard the build cost: only run 1
     // pays it, runs 2-3 read the memo.)
     var charges = Map.empty[String, String]
-    val samples = (1 to runs).map { _ =>
+    // the LAST pass is profiled (warm, like every timed pass after the
+    // first): its queries run under a job group named after the query.
+    // Tagging sits outside the timed region.
+    val profile = new Profile
+    spark.sparkContext.addSparkListener(profile)
+    val samples = (1 to runs).map { pass =>
       QueryMemo.clear()
-      val pass = names.map { case (name, fn) =>
+      val timed = names.map { case (name, fn) =>
+        if (pass == runs) spark.sparkContext.setJobGroup(name, name)
         val t0 = System.nanoTime()
         QueryMemo.setLabel(name)
         try { fn(spark, sfDir).count() } catch {
@@ -76,12 +98,20 @@ object Bench {
             if (!failed.contains(name)) failed += name
             System.err.println(s"[bench] $name failed: ${e.getMessage}")
         } finally { QueryMemo.setLabel(null); CacheScope.releaseAll() }
-        name -> (System.nanoTime() - t0) / 1e9
+        val sec = (System.nanoTime() - t0) / 1e9
+        spark.sparkContext.clearJobGroup()
+        name -> sec
       }.toMap
       // identical every pass (deterministic order + clear-per-pass)
       charges = QueryMemo.buildCharges
-      pass
+      timed
     }
+    org.apache.spark.sql.graft.Shims.drainListenerBus(spark)
+    spark.sparkContext.removeSparkListener(profile)
+    val profileJson = names.map { case (name, _) =>
+      val (j, st, t) = profile.counts(name)
+      s""""$name":{"jobs":$j,"stages":$st,"tasks":$t}"""
+    }.mkString("{", ",", "}")
     val results = names.map { case (name, _) =>
       name -> median(samples.map(_.apply(name)))
     }
@@ -156,7 +186,7 @@ object Bench {
         }
       }.getOrElse("null")
     }
-    val full = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"failed":$failedJson,"excluded":$excludedJson,"build_charged_to":$chargedJson,"shared_prev":$sharedJson,"runs":$runs,"sf":"$sfDir"}"""
+    val full = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"failed":$failedJson,"excluded":$excludedJson,"build_charged_to":$chargedJson,"shared_prev":$sharedJson,"runs":$runs,"sf":"$sfDir","profile":$profileJson}"""
     // The driver captures only the last ~2 KB of stdout; the per-query map
     // alone is ~2.4 KB. Persist the full record to a committed file and keep
     // the final stdout line under 200 bytes so it always parses. The path

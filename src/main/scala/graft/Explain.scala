@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan-inspection diagnostic: prints the formatted physical plan for the
   * named queries (or a default headline set) so scan pushdown
   * (PushedFilters / ReadSchema), broadcast joins, and whole-stage
@@ -19,17 +17,9 @@ object Explain {
         "wrp_modified", "evt_queue_depth", "evt_slow_consumer",
         "evt_kinesis_batches", "evt_counters", "evt_merge_errors",
         "doc_decontaminate", "doc_pack", "doc_mixture")
-    // r22: honor the bench's core-count env so plan dumps (e.g. the
-    // byte-capped spreadScan repartition target) reflect the session
-    // shape the bench actually runs — default unchanged.
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new graft.functions.GraftExtensions)
-      .getOrCreate()
+    // the bench's session shape, so plan dumps (e.g. the byte-capped
+    // spreadScan repartition target) show the plans the bench runs
+    val spark = GraftSession.local(GraftSession.cores)
     spark.sparkContext.setLogLevel("ERROR")
     names.foreach { n =>
       println(s"\n========== $n ==========")

@@ -4,7 +4,12 @@ import org.apache.spark.sql.SparkSession
 
 /** The library's one-call session setup — what a consumer switching
   * from the reference service configures to run these operators at
-  * cluster scale.
+  * cluster scale — and the ONLY place under src/main that builds a
+  * SparkSession: Bench, Verify, Explain and ScaleProbe all run on
+  * [[local]] at [[cores]], so the oracle gate, the timings and the
+  * probes share one session shape (GraftSessionSpec fails on a second
+  * builder). Each tool still picks its own log level — a diagnostic
+  * choice, not part of the shape.
   *
   * Everything here is a tuning default, not a correctness requirement:
   * every operator runs under a stock session too (the test harness
@@ -41,6 +46,12 @@ object GraftSession {
     .config("spark.sql.session.timeZone", "UTC")
     .config("spark.sql.legacy.parquet.nanosAsLong", "true")
     .withExtensions(new graft.functions.GraftExtensions)
+
+  /** Local core count for the entry points: SPARK_GRAFT_CPUS when set,
+    * else every processor the JVM sees. */
+  def cores: Int =
+    sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+      .getOrElse(Runtime.getRuntime.availableProcessors)
 
   /** Local development/test session at the given parallelism. */
   def local(cores: Int): SparkSession = {

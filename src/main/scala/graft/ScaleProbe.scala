@@ -363,15 +363,8 @@ object ScaleProbe {
 
   def main(args: Array[String]): Unit = {
     val dir = args.head
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      // same AQE coalescing floor as Bench/GraftSession (r21): probes
-      // measure the library under its intended session shape
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        sys.env.getOrElse("SPARK_GRAFT_MIN_PART", "64k"))
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new graft.functions.GraftExtensions)
-      .getOrCreate()
+    // probes measure the library under the bench's session shape
+    val spark = GraftSession.local(GraftSession.cores)
     spark.sparkContext.setLogLevel("WARN")
     spark.range(1000000).selectExpr("sum(id)").collect()
     args.tail.foreach { q =>

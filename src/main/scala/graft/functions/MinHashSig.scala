@@ -2,7 +2,9 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodeGenerator, CodegenContext, ExprCode, FalseLiteral}
+import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, StringType}
@@ -17,8 +19,8 @@ import org.apache.spark.unsafe.hash.Murmur3_x86_32
   * evaluation exactly: seed 42 → `Murmur3_x86_32.hashInt(j, 42)` for
   * the literal int, then `Murmur3_x86_32.hashUnsafeBytes(bytes, h_j)`
   * for the string (a NULL shingle leaves the running hash at h_j, the
-  * Murmur3Hash null rule; an empty/all-skipped input yields the k-NULL
-  * array `array_min(empty) = null` produced). MinHashSigSpec pins the
+  * Murmur3Hash null rule; an empty or NULL input yields the k-NULL
+  * array `array_min(empty | NULL) = null` produced). MinHashSigSpec pins the
   * kernel to the HOF formulation element-for-element on random input.
   *
   * Why a kernel (guide §1.2 per-task work / the SimHash64 precedent):
@@ -37,25 +39,34 @@ case class MinHashSig(child: Expression, k: Int) extends UnaryExpression {
     case other => TypeCheckResult.TypeCheckFailure(
       s"minhash_sig requires array<string>, got ${other.catalogString}")
   }
-  // element NULL only for an empty shingle set — the array_min(empty)
-  // contract of the formulation this kernel replaces
+  // element NULL only for a NULL or empty shingle set — the
+  // array_min(NULL / empty) contract of the formulation this kernel
+  // replaces, whose array(...) constructor is itself never NULL
   override def dataType: DataType = ArrayType(IntegerType, containsNull = true)
+  override def nullable: Boolean = false
   override def prettyName: String = "minhash_sig"
 
-  override protected def nullSafeEval(input: Any): Any =
-    MinHashSig.compute(input.asInstanceOf[ArrayData], k)
+  override def eval(input: InternalRow): Any =
+    MinHashSig.compute(child.eval(input).asInstanceOf[ArrayData], k)
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.MinHashSig.compute($c, $k)")
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val c = child.genCode(ctx)
+    ev.copy(code = code"""
+      ${c.code}
+      ${CodeGenerator.javaType(dataType)} ${ev.value} =
+        graft.functions.MinHashSig.compute(${c.isNull} ? null : ${c.value}, $k);
+    """, isNull = FalseLiteral)
+  }
 
   override protected def withNewChildInternal(newChild: Expression): MinHashSig =
     copy(child = newChild)
 }
 
 object MinHashSig {
-  /** Shared by interpreted eval and generated code. */
+  /** Shared by interpreted eval and generated code; a NULL input is the
+    * empty shingle set. */
   def compute(shingles: ArrayData, k: Int): ArrayData = {
-    val n = shingles.numElements()
+    val n = if (shingles == null) 0 else shingles.numElements()
     if (n == 0) return new GenericArrayData(new Array[Any](k))
     // h_j = murmur3 of the int literal j under Spark's seed 42 — the
     // running hash Murmur3Hash(Seq(lit(j), s)) carries into the string

@@ -1,7 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Shims
 
 /** Distributed connected components over an edge list — the clustering
   * step that turns pairwise near-duplicate DETECTION (TextDedup /
@@ -97,20 +98,13 @@ object ConnectedComponents {
     // key) and byte sizes known to be edge-list tiny relative to the
     // corpus scans that produced them, so runtime re-planning buys
     // nothing here; with AQE off each round's materialization fuses
-    // into ONE multi-stage job (JobProfile: doc_dedup_canon 58 → ~20
-    // jobs). Static planning still reuses the per-round exchange
-    // (ReuseExchange). Restored in `finally`; escape hatch
-    // spark.graft.cc.adaptive=true keeps AQE on (e.g. a deployment
-    // that has measured mega-component join skew and wants AQE's
-    // skew-join splitting back at the price of 5× the jobs).
+    // into ONE multi-stage job (doc_dedup_canon 58 → ~38 jobs). Static
+    // planning still reuses the per-round exchange (ReuseExchange).
+    // The loop runs on a CLONE of the caller's session, so the caller
+    // — and any query running there concurrently — never sees the
+    // loop's settings; the checkpointed frames move between the two
+    // sessions by re-rooting their constant-size LogicalRDD plans.
     val spark = edges.sparkSession
-    val aqeKey = "spark.sql.adaptive.enabled"
-    val shpKey = "spark.sql.shuffle.partitions"
-    val prevAqe = spark.conf.getOption(aqeKey)
-    val prevShp = spark.conf.getOption(shpKey)
-    val keepAqe =
-      spark.conf.getOption("spark.graft.cc.adaptive").exists(_.toBoolean)
-    try {
     // LAZY localCheckpoint + count(): ONE job both materializes the
     // checkpoint and returns its size. The checkpoint replaces the
     // logical plan with a constant-size leaf, so per-round Catalyst
@@ -136,16 +130,15 @@ object ConnectedComponents {
     // constant tuned to the local core count — and capped at
     // defaultParallelism, the same ceiling the session's
     // shuffle.partitions already encodes.
-    if (!keepAqe) {
-      val loopParts = math.max(1L, math.min(
-        spark.sparkContext.defaultParallelism.toLong,
-        (baseCount + 4095) / 4096))
-      spark.conf.set(aqeKey, "false")
-      spark.conf.set(shpKey, loopParts.toString)
-    }
+    val loop = Shims.cloneSession(spark)
+    loop.conf.set("spark.sql.adaptive.enabled", "false")
+    loop.conf.set("spark.sql.shuffle.partitions", math.max(1L, math.min(
+      spark.sparkContext.defaultParallelism.toLong, (baseCount + 4095) / 4096)))
+    def on(s: SparkSession, df: DataFrame): DataFrame =
+      Shims.ofRows(s, df.queryExecution.logical)
     val nodes = base.select(col("u").as("id"))
       .union(base.select(col("v").as("id"))).distinct()
-    var cur = base.filter(col("u") =!= col("v"))
+    var cur = on(loop, base).filter(col("u") =!= col("v"))
       .localCheckpoint(eager = false)
     var curCount = cur.count()
     var converged = curCount == 0L
@@ -172,25 +165,12 @@ object ConnectedComponents {
     // At the fixpoint every edge is (member, component-min), already
     // materialized by the checkpoint; track it so Verify/Bench loops
     // release the blocks deterministically (CacheScope understands
-    // LogicalRDD-backed checkpoints).
+    // LogicalRDD-backed checkpoints). Everything downstream runs back
+    // on the caller's session, under its own configuration.
     graft.CacheScope.track(cur)
-    val roots = cur.groupBy(col("u").as("id")).agg(min(col("v")).as("comp"))
+    val roots = on(spark, cur)
+      .groupBy(col("u").as("id")).agg(min(col("v")).as("comp"))
     nodes.join(roots, Seq("id"), "left")
       .select(col("id"), coalesce(col("comp"), col("id")).as("component"))
-    } finally {
-      // restore the caller's AQE setting — the returned frame (and
-      // everything downstream of it) executes under the session's own
-      // configuration; only the loop's materializations ran without it
-      if (!keepAqe) {
-        prevAqe match {
-          case Some(v) => spark.conf.set(aqeKey, v)
-          case None => spark.conf.unset(aqeKey)
-        }
-        prevShp match {
-          case Some(v) => spark.conf.set(shpKey, v)
-          case None => spark.conf.unset(shpKey)
-        }
-      }
-    }
   }
 }

@@ -50,10 +50,9 @@ object Skew {
     * min(defaultParallelism, ceil(onDiskBytes / bytesPerTask)) (r22:
     * uncapped defaultParallelism put 32 micro-tasks on a 100 KB input,
     * so added task fixed costs canceled the parallelism win at high
-    * core counts — VERDICT r21). bytesPerTask is
-    * `spark.graft.spread.bytesPerTask` (default 64k of COMPRESSED
+    * core counts — VERDICT r21). bytesPerTask is 64k of COMPRESSED
     * input ≈ a few hundred KB of text — enough per-shingle/md5/decode
-    * work to dwarf a task's fixed cost). At production scale a corpus
+    * work to dwarf a task's fixed cost. At production scale a corpus
     * scan plans thousands of splits and this is a no-op (no exchange
     * is added); on an unsplittable input it costs one exchange of the
     * payload to buy byte-justified map parallelism for the expensive
@@ -66,15 +65,8 @@ object Skew {
     org.apache.spark.sql.graft.Shims.bareScanSplits(df) match {
       case None => df
       case Some((planned, bytes)) =>
-        val spark = df.sparkSession
-        // conf first, env second (A/B sweeps without a session rebuild),
-        // measured default last
-        val perTask = math.max(1L, org.apache.spark.network.util.JavaUtils
-          .byteStringAsBytes(spark.conf.getOption(
-              "spark.graft.spread.bytesPerTask")
-            .orElse(sys.env.get("SPARK_GRAFT_SPREAD_BPT"))
-            .getOrElse("64k")))
-        val cores = spark.sparkContext.defaultParallelism.toLong
+        val perTask = 64L * 1024
+        val cores = df.sparkSession.sparkContext.defaultParallelism.toLong
         val target = math.min(cores,
           math.max(1L, (bytes + perTask - 1) / perTask)).toInt
         if (planned < target) df.repartition(target) else df

@@ -177,8 +177,10 @@ object DocStream {
     * regardless of verdict; and the FIFO cap applies after EVERY
     * append, so a bucket at cap drops its oldest entry before the next
     * row is judged. Returns (verdicts, ids, sigs) with ids
-    * newest-first and sigs flattened k-per-doc. */
-  private def judgeBucket(oldIds: Array[Long], oldSigs: Array[Int],
+    * newest-first and sigs flattened k-per-doc. A signature width that
+    * differs from the stored one (k changed across a restart) fails
+    * fast: stored and new signatures are not comparable. */
+  private[graft] def judgeBucket(oldIds: Array[Long], oldSigs: Array[Int],
       rows: Array[BandDoc], tau: Double, maxPerBucket: Int)
       : (List[BandVerdict], Array[Long], Array[Int]) = {
     val out = List.newBuilder[BandVerdict]
@@ -186,6 +188,11 @@ object DocStream {
     val newSigs = scala.collection.mutable.ArrayBuffer.empty[Int]
     // stored signature width (uniform per bucket: one k per pipeline)
     val ko = if (oldIds.length > 0) oldSigs.length / oldIds.length else 0
+    val w = if (rows.nonEmpty) rows(0).sig.length else ko
+    if (oldIds.length > 0 && w != ko) throw new IllegalStateException(
+      s"near-dup state holds $ko-wide signatures but this batch carries " +
+        s"$w-wide ones: the signature width changed, so the checkpoint " +
+        "path needs a bump (stored state cannot be judged against it)")
     // live window under the per-row FIFO cap: batch-local entries
     // [newStart, newIds.length) + persisted entries [0, oldLive)
     var oldLive = oldIds.length
@@ -234,9 +241,6 @@ object DocStream {
         if (oldLive > 0) oldLive -= 1 else newStart += 1
       }
     }
-    val w =
-      if (rows.nonEmpty) rows(0).sig.length
-      else ko
     val nNew = newIds.length - newStart
     val total = nNew + oldLive
     val ids = new Array[Long](total)
@@ -254,7 +258,7 @@ object DocStream {
     while (i < oldLive) {
       ids(idx) = oldIds(i)
       var j = 0
-      while (j < w) { sigs(idx * w + j) = oldSigs(i * w + j); j += 1 }
+      while (j < ko) { sigs(idx * w + j) = oldSigs(i * ko + j); j += 1 }
       idx += 1
       i += 1
     }
@@ -326,30 +330,29 @@ object DocStream {
     judged.union(short)
   }
 
-  /** Query-scoped cache lifecycle: unpersist `cached` when `q`
-    * terminates, covering the died-in-first-batch race (unpersist is
-    * idempotent). A long-lived session may run many streams — frozen
-    * reference tables must not outlive their query. */
-  private def releaseOnTermination(
-      q: StreamingQuery, cached: DataFrame): StreamingQuery = {
-    val spark = cached.sparkSession
+  /** Query-scoped lifecycle: run `release` exactly once when `q`
+    * terminates — also when it died before the listener was added (the
+    * died-in-first-batch race), which the `isActive` check after
+    * registration catches. A long-lived session may run many streams —
+    * frozen reference tables must not outlive their query. */
+  private[streaming] def releaseOnTermination(q: StreamingQuery)(
+      release: => Unit): StreamingQuery = {
+    val streams = q.sparkSession.streams
+    val once = new java.util.concurrent.atomic.AtomicBoolean(false)
+    def fire(l: org.apache.spark.sql.streaming.StreamingQueryListener): Unit =
+      if (once.compareAndSet(false, true)) {
+        release
+        streams.removeListener(l)
+      }
     val listener = new org.apache.spark.sql.streaming.StreamingQueryListener {
-      override def onQueryStarted(
-          e: org.apache.spark.sql.streaming.StreamingQueryListener.QueryStartedEvent): Unit = ()
-      override def onQueryProgress(
-          e: org.apache.spark.sql.streaming.StreamingQueryListener.QueryProgressEvent): Unit = ()
-      override def onQueryTerminated(
-          e: org.apache.spark.sql.streaming.StreamingQueryListener.QueryTerminatedEvent): Unit =
-        if (e.id == q.id) {
-          cached.unpersist(blocking = false)
-          spark.streams.removeListener(this)
-        }
+      import org.apache.spark.sql.streaming.StreamingQueryListener._
+      override def onQueryStarted(e: QueryStartedEvent): Unit = ()
+      override def onQueryProgress(e: QueryProgressEvent): Unit = ()
+      override def onQueryTerminated(e: QueryTerminatedEvent): Unit =
+        if (e.id == q.id) fire(this)
     }
-    spark.streams.addListener(listener)
-    if (!q.isActive) {
-      cached.unpersist(blocking = false)
-      spark.streams.removeListener(listener)
-    }
+    streams.addListener(listener)
+    if (!q.isActive) fire(listener)
     q
   }
 
@@ -387,7 +390,7 @@ object DocStream {
       catch {
         case t: Throwable => benchSpans.unpersist(blocking = false); throw t
       }
-    releaseOnTermination(q, benchSpans)
+    releaseOnTermination(q)(benchSpans.unpersist(blocking = false))
   }
 
   /** Streaming benchmark decontamination (the incremental twin of
@@ -428,7 +431,7 @@ object DocStream {
         // start() failed: no query will ever terminate — free the cache
         case t: Throwable => benchGrams.unpersist(blocking = false); throw t
       }
-    releaseOnTermination(q, benchGrams)
+    releaseOnTermination(q)(benchGrams.unpersist(blocking = false))
   }
 
   /** Streaming FUZZY decontamination — the on-arrival twin of
@@ -470,7 +473,7 @@ object DocStream {
       catch {
         case t: Throwable => benchSigs.unpersist(blocking = false); throw t
       }
-    releaseOnTermination(q, benchSigs)
+    releaseOnTermination(q)(benchSigs.unpersist(blocking = false))
   }
 
   /** Streaming per-domain admission cap (the incremental twin of
@@ -672,10 +675,8 @@ object DocStream {
       refineWith: Option[(DataFrame, Int)] = None): StreamingQuery = {
     // pin the frozen index for the query lifetime (r21, the
     // semanticAdmitSink discipline): per-trigger parquet re-reads of
-    // the artifact frames were pure fixed cost. Released when the
-    // query terminates (r22, ADVICE r21 — see releasePinOnStop).
-    val index = graft.operators.Similarity.pinIndex(index0)
-    graft.streaming.EmbStream.releasePinOnStop(docs.writeStream
+    // the artifact frames were pure fixed cost
+    EmbStream.withPinnedIndex(index0)(index => docs.writeStream
       .outputMode(OutputMode.Append)
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
@@ -685,14 +686,13 @@ object DocStream {
         try {
           val vecs = graft.operators.TextFeatures.unigramBucketVec(b)
             .select(col("doc_id").as("vec_id"), col("e"))
-          graft.streaming.EmbStream
-            .admitVerdicts(vecs, index, tau, nprobe, refineWith)
+          EmbStream.admitVerdicts(vecs, index, tau, nprobe, refineWith)
             .withColumnRenamed("vec_id", "doc_id")
             .write.mode("overwrite").parquet(s"$outDir/batch_id=$batchId")
         } finally b.unpersist(blocking = false)
         ()
       }
-      .start(), index)
+      .start())
   }
 
   /** Signature agreement = matching minhash positions / k. */

@@ -2,6 +2,7 @@ package graft.streaming
 
 import graft.operators.Similarity
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.functions.{col, sqrt}
 import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery}
 
@@ -89,11 +90,8 @@ object EmbStream {
       refineWith: Option[(DataFrame, Int)] = None): StreamingQuery = {
     // pin the frozen index for the query lifetime (r21): every trigger
     // searches the same artifact frames — without the pin each batch
-    // re-reads them from parquet (per-trigger fixed cost). Released by
-    // [[releasePinOnStop]] when THIS query terminates (r22, ADVICE r21:
-    // multi-query sessions were accumulating pinned artifact frames).
-    val index = Similarity.pinIndex(index0)
-    releasePinOnStop(vectors.writeStream
+    // re-reads them from parquet (per-trigger fixed cost)
+    withPinnedIndex(index0)(index => vectors.writeStream
       .outputMode(OutputMode.Append)
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
@@ -106,31 +104,40 @@ object EmbStream {
         finally b.unpersist(blocking = false)
         ()
       }
-      .start(), index)
+      .start())
   }
 
-  /** Release a [[Similarity.pinIndex]]'d index's cached frames when the
-    * given streaming query terminates (r22, ADVICE r21): without this,
-    * every admission query a session ever started leaked its three
-    * MEMORY_AND_DISK artifact frames until session end. The listener
-    * keys on the query id and removes itself after firing, so
-    * concurrent admission queries each release exactly their own pin. */
-  private[graft] def releasePinOnStop(q: StreamingQuery,
-      index: Similarity.IvfPqIndex): StreamingQuery = {
-    val spark = index.coarse.sparkSession
-    val listener = new org.apache.spark.sql.streaming.StreamingQueryListener {
-      import org.apache.spark.sql.streaming.StreamingQueryListener._
-      override def onQueryStarted(e: QueryStartedEvent): Unit = ()
-      override def onQueryProgress(e: QueryProgressEvent): Unit = ()
-      override def onQueryTerminated(e: QueryTerminatedEvent): Unit =
-        if (e.id == q.id) {
-          Seq(index.coarse, index.codebooks, index.codes)
-            .foreach(_.unpersist(blocking = false))
-          spark.streams.removeListener(this)
-        }
+  /** Live pins per index, keyed by its frames' canonical plans — the
+    * key the CacheManager shares cached data under, so admission
+    * queries over one index (or over two loads of one artifact) share
+    * one cache entry, and only the last of them to stop releases it. */
+  private val pins = scala.collection.mutable.HashMap.empty[Seq[LogicalPlan], Int]
+
+  /** Start a query (`start`) against `index0` pinned
+    * ([[Similarity.pinIndex]]) for the query's lifetime (r22, ADVICE
+    * r21: multi-query sessions were accumulating pinned artifact
+    * frames). Pins are counted per index, so stopping one of two
+    * admission queries over the same index leaves the other's frames
+    * cached. */
+  private[graft] def withPinnedIndex(index0: Similarity.IvfPqIndex)(
+      start: Similarity.IvfPqIndex => StreamingQuery): StreamingQuery = {
+    val key = Seq(index0.coarse, index0.codebooks, index0.codes)
+      .map(_.queryExecution.analyzed.canonicalized)
+    val index = pins.synchronized {
+      pins(key) = pins.getOrElse(key, 0) + 1
+      Similarity.pinIndex(index0)
     }
-    spark.streams.addListener(listener)
-    q
+    def unpin(): Unit = pins.synchronized {
+      val n = pins(key) - 1
+      if (n > 0) pins(key) = n
+      else {
+        pins.remove(key)
+        Seq(index.coarse, index.codebooks, index.codes)
+          .foreach(_.unpersist(blocking = false))
+      }
+    }
+    val q = try start(index) catch { case t: Throwable => unpin(); throw t }
+    DocStream.releaseOnTermination(q)(unpin())
   }
 
   /** The admission verdict for one (vec_id, e) frame against a frozen

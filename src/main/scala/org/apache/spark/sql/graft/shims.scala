@@ -23,6 +23,19 @@ object Shims {
     org.apache.spark.sql.classic.Dataset.ofRows(
       spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
 
+  /** Block until every event posted so far has reached every
+    * SparkListener (LiveListenerBus.waitUntilEmpty is private[spark]):
+    * a deterministic drain where a sleep would only usually suffice. */
+  def drainListenerBus(spark: org.apache.spark.sql.SparkSession): Unit =
+    spark.sparkContext.listenerBus.waitUntilEmpty()
+
+  /** A session that shares `spark`'s SparkContext and cache and starts
+    * from a COPY of its SQL conf and function registry (cloneSession is
+    * private[sql]): conf set on the clone stays invisible to `spark`
+    * and to every query running there. */
+  def cloneSession(spark: org.apache.spark.sql.SparkSession): org.apache.spark.sql.SparkSession =
+    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].cloneSession()
+
   /** (planned scan partitions, on-disk bytes) of a BARE file-source
     * scan — the analyzed plan is (Project|Filter)* over exactly one
     * HadoopFsRelation — or None for any other shape. Pure plan + file-

@@ -90,4 +90,33 @@ class ConnectedComponentsSpec extends AnyFunSuite {
     assert(again.count() == 21)
     CacheScope.releaseAll()
   }
+
+  test("the loop never changes the caller's session conf: every job " +
+    "started during assign sees the caller's AQE setting") {
+    import spark.implicits._
+    val aqe = "spark.sql.adaptive.enabled"
+    val shp = spark.conf.get("spark.sql.shuffle.partitions")
+    assert(spark.conf.get(aqe) == "true")
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        seen.add(spark.conf.get(aqe))
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val chain = (0L until 63L).map(i => (i, i + 1))
+      val got = ConnectedComponents.assign(chain.toDF("u", "v")).collect()
+      assert(got.length == 64)
+      org.apache.spark.sql.graft.Shims.drainListenerBus(spark)
+    } finally {
+      spark.sparkContext.removeSparkListener(listener)
+      CacheScope.releaseAll()
+    }
+    import scala.jdk.CollectionConverters._
+    // a 64-node chain needs several star rounds: the loop's jobs were seen
+    assert(seen.size > 5, s"only ${seen.size} jobs observed")
+    assert(seen.asScala.forall(_ == "true"), s"caller saw ${seen.asScala.toSeq}")
+    assert(spark.conf.get("spark.sql.shuffle.partitions") == shp)
+  }
 }

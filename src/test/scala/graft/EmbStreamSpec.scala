@@ -282,4 +282,62 @@ class EmbStreamSpec extends AnyFunSuite {
       }
     }
   }
+
+  test("semanticAdmitSink: index pins are counted — stopping one of two " +
+    "admission queries over the same index keeps the other's frames cached") {
+    implicit val sql = spark.sqlContext
+    val tmps = scala.collection.mutable.ArrayBuffer.empty[java.nio.file.Path]
+    def tmp(prefix: String): String = {
+      val p = java.nio.file.Files.createTempDirectory(prefix)
+      tmps += p; p.toString
+    }
+    val terminated = new java.util.concurrent.LinkedBlockingQueue[java.util.UUID]()
+    // registered AFTER both sinks' release listeners, so it hears each
+    // termination only once those listeners have run
+    val probe = new org.apache.spark.sql.streaming.StreamingQueryListener {
+      import org.apache.spark.sql.streaming.StreamingQueryListener._
+      override def onQueryStarted(e: QueryStartedEvent): Unit = ()
+      override def onQueryProgress(e: QueryProgressEvent): Unit = ()
+      override def onQueryTerminated(e: QueryTerminatedEvent): Unit =
+        terminated.put(e.id)
+    }
+    try {
+      val idxDir = tmp("pin_idx")
+      Similarity.saveIvfPqIndex(Similarity.ivfPqFit(vecs, dim = 64, m = 8,
+        kc = 16, kCoarse = 2, iters = 1), idxDir)
+      CacheScope.releaseAll()
+      val frozen = Similarity.loadIvfPqIndex(spark, idxDir)
+      def cached: Seq[Boolean] = Seq(frozen.coarse, frozen.codebooks,
+        frozen.codes).map(_.storageLevel != org.apache.spark.storage.StorageLevel.NONE)
+      def start(): org.apache.spark.sql.streaming.StreamingQuery =
+        EmbStream.semanticAdmitSink(
+          MemoryStream[(Long, Seq[Double])].toDF().toDF("vec_id", "e"),
+          frozen, tau = 0.9, nprobe = 2, tmp("pin_out"), tmp("pin_ck"))
+      val q1 = start()
+      val q2 = start()
+      spark.streams.addListener(probe)
+      try {
+        assert(cached == Seq(true, true, true))
+        q1.stop()
+        assert(terminated.poll(60, java.util.concurrent.TimeUnit.SECONDS) == q1.id)
+        assert(cached == Seq(true, true, true),
+          "stopping q1 released index frames q2 still serves")
+        q2.stop()
+        assert(terminated.poll(60, java.util.concurrent.TimeUnit.SECONDS) == q2.id)
+        assert(cached == Seq(false, false, false),
+          "the last admission query's stop must release the pin")
+      } finally { q1.stop(); q2.stop() }
+    } finally {
+      spark.streams.removeListener(probe)
+      CacheScope.releaseAll()
+      tmps.foreach { p =>
+        val walk = java.nio.file.Files.walk(p)
+        try {
+          import scala.jdk.CollectionConverters._
+          walk.iterator().asScala.toSeq.sortBy(-_.getNameCount)
+            .foreach(java.nio.file.Files.deleteIfExists(_))
+        } finally walk.close()
+      }
+    }
+  }
 }

@@ -21,8 +21,43 @@ class GraftSessionSpec extends AnyFunSuite {
 
   test("scale defaults are applied") {
     val s = GraftSession.local(4)
-    assert(s.conf.get("spark.sql.adaptive.enabled") == "true")
-    assert(s.conf.get("spark.sql.optimizer.runtime.bloomFilter.enabled") == "true")
+    // every GraftSession.builder setting, incl. the 64k AQE coalescing
+    // floor the bench is timed under: one session shape for all tools
+    Seq(
+      "spark.sql.adaptive.enabled" -> "true",
+      "spark.sql.adaptive.skewJoin.enabled" -> "true",
+      "spark.sql.adaptive.coalescePartitions.minPartitionSize" -> "64k",
+      "spark.sql.optimizer.runtime.bloomFilter.enabled" -> "true",
+      "spark.sql.sources.partitionOverwriteMode" -> "dynamic",
+      "spark.sql.session.timeZone" -> "UTC",
+      "spark.sql.legacy.parquet.nanosAsLong" -> "true",
+      "spark.sql.shuffle.partitions" -> "4"
+    ).foreach { case (k, v) => assert(s.conf.get(k) == v, k) }
+  }
+
+  test("GraftSession is the only session builder under src/main, and " +
+    "the removed tuning knobs have no reader") {
+    import java.nio.file.{Files, Path, Paths}
+    import scala.jdk.CollectionConverters._
+    val root = Paths.get("src/main")
+    assert(Files.isDirectory(root),
+      s"expected to run from the repository root, cwd=${sys.props("user.dir")}")
+    val walk = Files.walk(root)
+    val sources: Seq[(Path, String)] =
+      try walk.iterator().asScala.filter(_.toString.endsWith(".scala"))
+        .map(p => p -> Files.readString(p)).toList
+      finally walk.close()
+    assert(sources.exists(_._1.endsWith("graft/GraftSession.scala")))
+    val builders = sources.collect {
+      case (p, src) if !p.endsWith("graft/GraftSession.scala") &&
+        src.contains("SparkSession.builder(") => p
+    }
+    assert(builders.isEmpty, s"second session builder in $builders")
+    val removed = Seq("SPARK_GRAFT_MIN_PART", "SPARK_GRAFT_SPREAD_BPT",
+      "spark.graft.spread.bytesPerTask", "spark.graft.cc.adaptive")
+    val readers = for ((p, src) <- sources; k <- removed if src.contains(k))
+      yield s"$p reads $k"
+    assert(readers.isEmpty, readers.mkString("; "))
   }
 
   test("as-of planner strategy survives a pre-existing session (ensure path)") {

@@ -11,7 +11,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * string hash. Any divergence would silently break stream≡batch
   * verdict parity (StreamingDedupSpec), so the pin is element-level
   * over adversarial inputs: unicode, empty strings, duplicates, a
-  * one-element array, and the k-NULL empty-shingle contract. */
+  * one-element array, and the k-NULL contract for an empty or NULL
+  * shingle array. */
 class MinHashSigSpec extends AnyFunSuite {
 
   lazy val spark: SparkSession = SparkTest.spark
@@ -31,11 +32,13 @@ class MinHashSigSpec extends AnyFunSuite {
       Seq("héllo wörld ünïcode", "日本語 テスト 文字", "emoji 🎉 x"),
       Seq("dup", "dup", "dup"),               // duplicates cannot change min
       (1 to 200).map(i => s"w$i w${i + 1} w${i + 2}"), // long array
-      Seq.empty[String])                       // k-NULL contract
+      Seq.empty[String],                       // k-NULL contract
+      null)                                    // NULL input: k-NULL too
     val df = rows.toDF("shingles")
     val got = df.select(
       graft.functions.MinHashSig.column(col("shingles"), k).as("kernel"),
       hofSig.as("hof")).collect()
+    assert(got.last.getSeq[Any](1) == Seq.fill(k)(null))
     got.foreach { r =>
       assert(r.getSeq[Any](0) == r.getSeq[Any](1),
         s"kernel ${r.getSeq[Any](0)} != hof ${r.getSeq[Any](1)}")

@@ -244,4 +244,24 @@ class StreamingDedupSpec extends AnyFunSuite {
       .collect().map(r => r.getLong(0) -> r.getSeq[Int](1)).toMap
     assert(streamSide == batchSide)
   }
+
+  test("judgeBucket: stored signatures keep their own width; a changed " +
+    "width fails fast instead of mis-copying state") {
+    import graft.streaming.BandDoc
+    val old = Array(7L, 3L)
+    val oldSigs = Array(1, 2, 3, 4, 5, 6, 7, 8)         // two 4-wide sigs
+    // same width: old entries survive verbatim behind the new one
+    val (v, ids, sigs) = DocStream.judgeBucket(old, oldSigs,
+      Array(BandDoc(0, 0, 9L, Array(5, 6, 7, 0))), tau = 0.5, maxPerBucket = 10)
+    assert(v.map(_.dup_of) == List(Some(3L)))
+    assert(ids.toSeq == Seq(9L, 7L, 3L))
+    assert(sigs.toSeq == Seq(5, 6, 7, 0, 1, 2, 3, 4, 5, 6, 7, 8))
+    // k changed across a restart: narrower and wider batches both refuse
+    Seq(Array(1, 2), Array(1, 2, 3, 4, 5, 6)).foreach { sig =>
+      val e = intercept[IllegalStateException](DocStream.judgeBucket(
+        old, oldSigs, Array(BandDoc(0, 0, 9L, sig)), 0.5, 10))
+      assert(e.getMessage.contains("signature width changed"), e.getMessage)
+      assert(e.getMessage.contains("checkpoint"), e.getMessage)
+    }
+  }
 }

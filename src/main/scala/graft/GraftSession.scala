@@ -23,8 +23,8 @@ import org.apache.spark.sql.SparkSession
   *   at 100 TB this is the difference between shuffling the full fact
   *   table and shuffling the ~1% that can join (BloomFilterJoinSpec
   *   audits the plan shape).
-  * - Dynamic partition overwrite: idempotent batch replays (the
-  *   streaming failover sink depends on per-partition overwrite).
+  * - Dynamic partition overwrite: a partitioned overwrite replaces only
+  *   the partitions it writes, so replaying one leaves its siblings.
   * - Nanosecond parquet timestamps surfaced as LONG, for corpus
   *   generations whose events table is TIMESTAMP(NANOS) — the loader
   *   adapts to whatever `ts` physical type the footer carries (see

@@ -151,13 +151,20 @@ object GraftFunctions {
     ("nearest_code", classOf[NearestCode],
       arity("nearest_code", 3)(e => NearestCode(e(0), e(1), e(2)))))
 
-  /** Register graft functions on a session (SQL-callable). */
-  def register(spark: SparkSession): Unit =
+  /** Register graft functions on a session (SQL-callable). Names the
+    * session already knows are kept as they are: a session built with
+    * [[GraftExtensions]] has every one of them, and re-registering
+    * would only replace each function with itself (and log a
+    * "replaced a previously registered function" WARN per name). */
+  def register(spark: SparkSession): Unit = {
+    val registry = spark.sessionState.functionRegistry
     sqlFunctions.foreach { case (name, cls, builder) =>
-      spark.sessionState.functionRegistry.registerFunction(
-        FunctionIdentifier(name),
-        new ExpressionInfo(cls.getName, name), builder)
+      val id = FunctionIdentifier(name)
+      if (!registry.functionExists(id))
+        registry.registerFunction(id, new ExpressionInfo(cls.getName, name),
+          builder)
     }
+  }
 }
 
 /** SparkSessionExtensions hook — the library-consumer path:

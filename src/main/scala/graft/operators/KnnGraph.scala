@@ -134,9 +134,9 @@ object KnnGraph {
     * nothing in parquet and survive any subtree listing order. */
   def appendDelta(index: Similarity.IvfPqIndex, newVecs: DataFrame,
       k: Int, nprobe: Int, deltaDir: String, batchId: Long): Unit = {
-    forwardEdges(index, newVecs, k, nprobe)
-      .withColumn("k", lit(k)).withColumn("nprobe", lit(nprobe))
-      .write.mode("overwrite").parquet(s"$deltaDir/batch_id=$batchId")
+    graft.streaming.Delivery.write(forwardEdges(index, newVecs, k, nprobe)
+      .withColumn("k", lit(k)).withColumn("nprobe", lit(nprobe)),
+      deltaDir, batchId)
   }
 
   /** The arrivals' forward top-k lists (the delta payload):
@@ -164,47 +164,33 @@ object KnnGraph {
   def loadWithDeltas(spark: SparkSession, dir: String,
       deltaDir: String): KnnGraphArtifact = {
     val base = load(spark, dir)
-    val path = new org.apache.hadoop.fs.Path(deltaDir)
-    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def hasDataFile(p: org.apache.hadoop.fs.Path): Boolean =
-      fs.listStatus(p).exists { st =>
-        val name = st.getPath.getName
-        if (st.isDirectory) !name.startsWith("_") && !name.startsWith(".") &&
-          hasDataFile(st.getPath)
-        else !name.startsWith("_") && !name.startsWith(".")
-      }
-    val hasDeltas = fs.exists(path) &&
-      fs.listStatus(path).exists { st =>
-        st.isDirectory && st.getPath.getName.startsWith("batch_id=") &&
-          hasDataFile(st.getPath)
-      }
-    if (!hasDeltas) base
-    else {
-      val deltas = spark.read.parquet(deltaDir)
-      checkEdgeCols("KnnGraph.loadWithDeltas", deltas)
-      // reject deltas searched at a different budget than the base
-      // graph's stamp (ADVICE r19) — one tiny agg over the stamp
-      // columns, which parquet serves from dictionary pages
-      val dHave = deltas.columns.toSet
-      require(dHave("k") && dHave("nprobe"),
-        s"KnnGraph.loadWithDeltas: deltas at $deltaDir carry no " +
-          "k/nprobe stamp (pre-r20 or hand-built) — re-append via " +
-          "KnnGraph.appendDelta, which stamps the search budget")
-      val budgets = deltas.select("k", "nprobe").distinct().collect()
-      budgets.foreach { r =>
-        require(r.getInt(0) == base.k && r.getInt(1) == base.nprobe,
-          s"KnnGraph.loadWithDeltas: delta searched at k=${r.getInt(0)}" +
-            s"/nprobe=${r.getInt(1)} but base graph is stamped " +
-            s"k=${base.k}/nprobe=${base.nprobe}")
-      }
-      val forward = deltas.select(EdgeCols.map(col): _*)
-      val meta = base.meta
-        .crossJoin(forward.agg(
-          countDistinct(col("query_id")).as("_arrivals")))
-        .withColumn("n_appended", col("n_appended") + col("_arrivals"))
-        .drop("_arrivals")
-      KnnGraphArtifact(base.k, base.nprobe,
-        mergeEdges(base.edges, forward, base.k), meta)
+    graft.streaming.Delivery.readDeltas(spark, deltaDir) match {
+      case None => base
+      case Some(deltas) =>
+        checkEdgeCols("KnnGraph.loadWithDeltas", deltas)
+        // reject deltas searched at a different budget than the base
+        // graph's stamp (ADVICE r19) — one tiny agg over the stamp
+        // columns, which parquet serves from dictionary pages
+        val dHave = deltas.columns.toSet
+        require(dHave("k") && dHave("nprobe"),
+          s"KnnGraph.loadWithDeltas: deltas at $deltaDir carry no " +
+            "k/nprobe stamp (pre-r20 or hand-built) — re-append via " +
+            "KnnGraph.appendDelta, which stamps the search budget")
+        val budgets = deltas.select("k", "nprobe").distinct().collect()
+        budgets.foreach { r =>
+          require(r.getInt(0) == base.k && r.getInt(1) == base.nprobe,
+            s"KnnGraph.loadWithDeltas: delta searched at k=${r.getInt(0)}" +
+              s"/nprobe=${r.getInt(1)} but base graph is stamped " +
+              s"k=${base.k}/nprobe=${base.nprobe}")
+        }
+        val forward = deltas.select(EdgeCols.map(col): _*)
+        val meta = base.meta
+          .crossJoin(forward.agg(
+            countDistinct(col("query_id")).as("_arrivals")))
+          .withColumn("n_appended", col("n_appended") + col("_arrivals"))
+          .drop("_arrivals")
+        KnnGraphArtifact(base.k, base.nprobe,
+          mergeEdges(base.edges, forward, base.k), meta)
     }
   }
 

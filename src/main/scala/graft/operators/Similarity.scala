@@ -1048,26 +1048,6 @@ object Similarity {
       .select("query_id", "neighbor_id", "rnk", "qcos")
   }
 
-  /** Pin a frozen index's three artifact frames in executor storage
-    * (r21 — the admission-sink fixed-cost fix): a long-lived streaming
-    * sink searches the SAME frozen index every trigger, and an
-    * unpinned index re-reads coarse/codebooks/codes from parquet and
-    * re-derives the densified codebook per micro-batch — pure
-    * per-trigger fixed cost (the textadmit probe's 84 docs/s r20
-    * reading). The frames are artifact-sized (cells + m·kc codebook
-    * rows + one code row per corpus vector — the compressed index,
-    * never raw vectors), which is exactly what an ANN index being
-    * SERVED is expected to hold resident. Caller owns the lifecycle:
-    * unpersist via the returned copy's frames when the query stops
-    * (a sink that outlives the session simply lets session teardown
-    * release them). */
-  def pinIndex(index: IvfPqIndex): IvfPqIndex = {
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    IvfPqIndex(index.m, index.dim, index.kc, index.kCoarse,
-      index.coarse.persist(lvl), index.codebooks.persist(lvl),
-      index.codes.persist(lvl), index.meta)
-  }
-
   /** Persist / reload an [[IvfPqIndex]] (parquet artifact, stamped
     * meta — the [[loadPqIndex]] fail-fast convention). */
   def saveIvfPqIndex(index: IvfPqIndex, dir: String): Unit = {
@@ -1104,40 +1084,21 @@ object Similarity {
   def loadIvfPqIndexWithDeltas(spark: org.apache.spark.sql.SparkSession,
       dir: String, deltaDir: String): IvfPqIndex = {
     val base = loadIvfPqIndex(spark, dir)
-    val path = new org.apache.hadoop.fs.Path(deltaDir)
-    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // a batch_id=N subtree may exist with no committed part files (an
-    // empty replayed micro-batch, or an aborted first write leaving
-    // only _temporary) — the documented contract is "no deltas loads
-    // the base unchanged", so require a READABLE data file, not just
-    // a directory name, before handing the path to the parquet reader
-    def hasDataFile(p: org.apache.hadoop.fs.Path): Boolean =
-      fs.listStatus(p).exists { st =>
-        val name = st.getPath.getName
-        if (st.isDirectory) !name.startsWith("_") && !name.startsWith(".") &&
-          hasDataFile(st.getPath)
-        else !name.startsWith("_") && !name.startsWith(".")
-      }
-    val hasDeltas = fs.exists(path) &&
-      fs.listStatus(path).exists { st =>
-        st.isDirectory && st.getPath.getName.startsWith("batch_id=") &&
-          hasDataFile(st.getPath)
-      }
-    if (!hasDeltas) base
-    else {
-      val deltas = spark.read.parquet(deltaDir)
-        .select(base.codes.columns.map(col): _*)
-      checkPqArtifacts("loadIvfPqIndexWithDeltas", deltaDir, base.m,
-        base.kc, base.codebooks, deltas, needsCluster = true)
-      val metaBase =
-        if (base.meta.columns.contains("n_appended")) base.meta
-        else base.meta.withColumn("n_appended", lit(0L))
-      val meta = metaBase
-        .crossJoin(deltas.agg(count(lit(1)).as("_batch")))
-        .withColumn("n_appended", col("n_appended") + col("_batch"))
-        .drop("_batch")
-      IvfPqIndex(base.m, base.dim, base.kc, base.kCoarse, base.coarse,
-        base.codebooks, base.codes.unionByName(deltas), meta)
+    graft.streaming.Delivery.readDeltas(spark, deltaDir) match {
+      case None => base
+      case Some(read) =>
+        val deltas = read.select(base.codes.columns.map(col): _*)
+        checkPqArtifacts("loadIvfPqIndexWithDeltas", deltaDir, base.m,
+          base.kc, base.codebooks, deltas, needsCluster = true)
+        val metaBase =
+          if (base.meta.columns.contains("n_appended")) base.meta
+          else base.meta.withColumn("n_appended", lit(0L))
+        val meta = metaBase
+          .crossJoin(deltas.agg(count(lit(1)).as("_batch")))
+          .withColumn("n_appended", col("n_appended") + col("_batch"))
+          .drop("_batch")
+        IvfPqIndex(base.m, base.dim, base.kc, base.kCoarse, base.coarse,
+          base.codebooks, base.codes.unionByName(deltas), meta)
     }
   }
 

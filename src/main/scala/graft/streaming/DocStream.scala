@@ -7,8 +7,10 @@ import org.apache.spark.storage.StorageLevel
 
 /** One (band bucket, doc) occupancy row flowing into the stateful op.
   * `sig` is a primitive array (r22): the Seq[Int] encoder boxed every
-  * signature element on the 4-rows-per-doc hot path. */
-case class BandDoc(band_idx: Int, band_hash: Int, doc_id: Long, sig: Array[Int])
+  * signature element on the 4-rows-per-doc hot path. `ts` is the doc's
+  * event time under an [[EventTimeTtl]], else None. */
+case class BandDoc(band_idx: Int, band_hash: Int, doc_id: Long,
+    sig: Array[Int], ts: Option[java.sql.Timestamp] = None)
 
 /** Per-band dedup verdict: `dup_of` is the smallest earlier doc in this
   * bucket whose signature agreement clears the threshold (None = this
@@ -16,14 +18,15 @@ case class BandDoc(band_idx: Int, band_hash: Int, doc_id: Long, sig: Array[Int])
 case class BandVerdict(doc_id: Long, band_idx: Int, dup_of: Option[Long],
     est_jaccard: Double)
 
-/** One (band bucket, doc) occupancy row with the doc's event time, for
-  * the event-time-TTL variant of the stateful op. */
-case class BandDocTs(band_idx: Int, band_hash: Int, doc_id: Long,
-    sig: Array[Int], ts: java.sql.Timestamp)
+/** Event-time state bound for [[DocStream.nearDupVerdicts]]: state in
+  * an idle band bucket expires once the watermark on `tsCol` (lagging
+  * by `delay`, the out-of-orderness bound) passes the newest event time
+  * that bucket has seen + `ttlMs`. */
+case class EventTimeTtl(tsCol: String, delay: String, ttlMs: Long)
 
 /** Signatures already seen in one LSH band bucket, plus the newest
-  * event time the bucket has observed (millis; used only by the
-  * event-time-TTL variant — the processing-time variant leaves it 0).
+  * event time the bucket has observed (millis; used only under an
+  * [[EventTimeTtl]] — without one it stays 0).
   *
   * Layout (r22): ids newest-first, signatures flattened k-per-doc and
   * aligned with ids (sigs.length == ids.length · k). The former
@@ -93,13 +96,18 @@ object DocStream {
 
   /** Explode each doc into its `bands` LSH bucket rows — the band
     * structs come from TextDedup.bandStructs, the ONE definition of the
-    * band-hash family, so stream and batch verdicts cannot drift. */
-  def bandRows(sigs: DataFrame, k: Int, bands: Int): DataFrame =
+    * band-hash family, so stream and batch verdicts cannot drift.
+    * Column `tsCol` becomes each row's [[BandDoc]] `ts` — kept as the
+    * column itself, so its watermark reaches the stateful op. */
+  def bandRows(sigs: DataFrame, k: Int, bands: Int,
+      tsCol: Option[String] = None): DataFrame =
     sigs
-      .select(col("doc_id"), col("sig"), explode(array(
-        graft.operators.TextDedup.bandStructs(k, bands): _*)).as("bs"))
+      .select(col("doc_id"), col("sig"),
+        tsCol.fold(lit(null).cast("timestamp"))(col).as("ts"), explode(array(
+          graft.operators.TextDedup.bandStructs(k, bands): _*)).as("bs"))
       .select(col("bs.band_idx").as("band_idx"),
-        col("bs.band_hash").as("band_hash"), col("doc_id"), col("sig"))
+        col("bs.band_hash").as("band_hash"), col("doc_id"), col("sig"),
+        col("ts"))
 
   /** Per-band verdicts via one flatMapGroupsWithState keyed on the band
     * bucket. "Earlier" means FIRST-SEEN in arrival order — the only
@@ -116,19 +124,21 @@ object DocStream {
     * not-a-dup verdict (band_idx -1) — a doc with no shingles cannot
     * near-duplicate anything under this similarity.
     *
-    * CAUTION: with `stateTtlMs > 0` the query uses
-    * ProcessingTimeTimeout, under which the engine schedules no-data
-    * micro-batches forever to fire future timeouts —
-    * `processAllAvailable()` on such a query NEVER returns. Tests and
-    * drain-style callers must poll the sink (or use
-    * [[nearDupVerdictsEventTime]], whose event-time timeout quiesces
-    * and replays deterministically from a checkpoint). */
+    * `ttl` bounds state AGE by event time, the production memory
+    * backstop alongside the per-bucket size cap (VERDICT r7 #8). The
+    * bound is driven by the DATA clock, so (a) checkpoint replays make
+    * identical keep/drop decisions, (b) `processAllAvailable()`
+    * terminates (the engine runs at most one no-data batch per
+    * watermark advance), and (c) it has batch-explainable semantics:
+    * "dedup against everything within the last TTL of event time".
+    * Without it state is bounded by `maxPerBucket` alone. */
   def nearDupVerdicts(docs: DataFrame, n: Int = 3, k: Int = 16,
       bands: Int = 4, tau: Double = 0.5,
       maxPerBucket: Int = 10000,
-      stateTtlMs: Long = 0L): Dataset[BandVerdict] = {
+      ttl: Option[EventTimeTtl] = None): Dataset[BandVerdict] = {
     import docs.sparkSession.implicits._
-    val sigged = withSignature(docs, n, k)
+    val signed = withSignature(docs, n, k)
+    val sigged = ttl.fold(signed)(t => signed.withWatermark(t.tsCol, t.delay))
     // coalesce: a NULL text must take the short path, not vanish from
     // BOTH filter branches (null fails `cond` and `!cond` alike)
     val hasSig = coalesce(size(split(col("text"), " ")) >= n, lit(false))
@@ -136,35 +146,46 @@ object DocStream {
       .select(col("doc_id"), lit(-1).as("band_idx"),
         lit(null).cast("long").as("dup_of"), lit(0.0).as("est_jaccard"))
       .as[BandVerdict]
-    // stateTtlMs > 0 bounds total state AGE, the production memory
-    // backstop alongside the per-bucket size cap: an idle bucket's
-    // signatures expire, trading long-range dedup for bounded state
-    val timeoutConf = if (stateTtlMs > 0) GroupStateTimeout.ProcessingTimeTimeout
+    val rows = bandRows(sigged.filter(hasSig), k, bands, ttl.map(_.tsCol))
+      .as[BandDoc]
+    val timeout = if (ttl.isDefined) GroupStateTimeout.EventTimeTimeout
       else GroupStateTimeout.NoTimeout
-    val rows = bandRows(sigged.filter(hasSig), k, bands).as[BandDoc]
     val judged = rows
       .groupByKey(r => (r.band_idx, r.band_hash))
       .flatMapGroupsWithState[BucketState, BandVerdict](
-        OutputMode.Append, timeoutConf) {
+        OutputMode.Append, timeout) {
         (_, batch: Iterator[BandDoc], state: GroupState[BucketState]) =>
           if (state.hasTimedOut) {
             state.remove()
             Iterator.empty
           } else {
             val st = state.getOption
+            val rs = batch.toArray.sortBy(_.doc_id)
+            // RUNNING max across micro-batches, not per-batch: an
+            // out-of-order batch (within the watermark delay) whose max
+            // ts is older than a prior batch's must not re-arm the
+            // timeout EARLIER — that would evict state prematurely and
+            // miss duplicates still inside the TTL.
+            val maxTs = rs.foldLeft(st.map(_.maxTs).getOrElse(0L))(
+              (m, r) => r.ts.fold(m)(t => math.max(m, t.getTime)))
             val (verdicts, ids, sigs) = judgeBucket(
               st.map(_.ids).getOrElse(Array.emptyLongArray),
               st.map(_.sigs).getOrElse(Array.emptyIntArray),
-              batch.toArray.sortBy(_.doc_id), tau, maxPerBucket)
-            state.update(BucketState(ids, sigs))
-            if (stateTtlMs > 0) state.setTimeoutDuration(stateTtlMs)
+              rs, tau, maxPerBucket)
+            state.update(BucketState(ids, sigs, maxTs))
+            // Arm expiry at (newest event this bucket has EVER seen) +
+            // TTL. The timestamp must exceed the current watermark or
+            // Spark throws; rows below the watermark were already
+            // dropped upstream, but guard anyway for the ttl=0 edge.
+            ttl.foreach(t => state.setTimeoutTimestamp(
+              math.max(maxTs, state.getCurrentWatermarkMs() + 1) + t.ttlMs))
             verdicts.iterator
           }
       }
     judged.union(short)
   }
 
-  /** Per-bucket judge shared by both TTL variants (r22 — the flat-array
+  /** Per-bucket judge of [[nearDupVerdicts]] (r22 — the flat-array
     * state core). Semantics are EXACTLY the r21 list fold's, row for
     * row: "earlier" = FIRST-SEEN arrival order — everything stored
     * before this doc (prior micro-batches, newest-first, plus earlier
@@ -265,97 +286,6 @@ object DocStream {
     (out.result(), ids, sigs)
   }
 
-  /** Event-time-TTL twin of [[nearDupVerdicts]] (VERDICT r7 #8): state
-    * in an idle band bucket expires once the watermark passes (newest
-    * event time that bucket has seen) + `stateTtlMs`. Unlike the
-    * processing-time backstop, expiry is driven by the DATA clock, so
-    * (a) checkpoint replays make identical keep/drop decisions, (b)
-    * `processAllAvailable()` terminates (the engine runs at most one
-    * no-data batch per watermark advance, not an unbounded timeout
-    * ticker), and (c) the bound has batch-explainable semantics:
-    * "dedup against everything within the last TTL of event time".
-    * `docs` must carry event-time column `tsCol`; `delay` is the
-    * watermark out-of-orderness bound. */
-  def nearDupVerdictsEventTime(docs: DataFrame, tsCol: String,
-      delay: String, stateTtlMs: Long, n: Int = 3, k: Int = 16,
-      bands: Int = 4, tau: Double = 0.5,
-      maxPerBucket: Int = 10000): Dataset[BandVerdict] = {
-    import docs.sparkSession.implicits._
-    val sigged = withSignature(docs, n, k).withWatermark(tsCol, delay)
-    val hasSig = coalesce(size(split(col("text"), " ")) >= n, lit(false))
-    val short = sigged.filter(!hasSig)
-      .select(col("doc_id"), lit(-1).as("band_idx"),
-        lit(null).cast("long").as("dup_of"), lit(0.0).as("est_jaccard"))
-      .as[BandVerdict]
-    val rows = sigged.filter(hasSig)
-      .select(col("doc_id"), col("sig"), col(tsCol).as("ts"), explode(array(
-        graft.operators.TextDedup.bandStructs(k, bands): _*)).as("bs"))
-      .select(col("bs.band_idx").as("band_idx"),
-        col("bs.band_hash").as("band_hash"), col("doc_id"), col("sig"),
-        col("ts"))
-      .as[BandDocTs]
-    val judged = rows
-      .groupByKey(r => (r.band_idx, r.band_hash))
-      .flatMapGroupsWithState[BucketState, BandVerdict](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (_, batch: Iterator[BandDocTs], state: GroupState[BucketState]) =>
-          if (state.hasTimedOut) {
-            state.remove()
-            Iterator.empty
-          } else {
-            val st = state.getOption
-            // RUNNING max across micro-batches, not per-batch: an
-            // out-of-order batch (within the watermark delay) whose max
-            // ts is older than a prior batch's must not re-arm the
-            // timeout EARLIER — that would evict state prematurely and
-            // miss duplicates still inside the TTL.
-            var maxTs = st.map(_.maxTs).getOrElse(0L)
-            val rs = batch.toArray.sortBy(_.doc_id)
-            rs.foreach(r => maxTs = math.max(maxTs, r.ts.getTime))
-            val (verdicts, ids, sigs) = judgeBucket(
-              st.map(_.ids).getOrElse(Array.emptyLongArray),
-              st.map(_.sigs).getOrElse(Array.emptyIntArray),
-              rs.map(r => BandDoc(r.band_idx, r.band_hash, r.doc_id, r.sig)),
-              tau, maxPerBucket)
-            state.update(BucketState(ids, sigs, maxTs))
-            // Arm expiry at (newest event this bucket has EVER seen) +
-            // TTL. The timestamp must exceed the current watermark or
-            // Spark throws; rows below the watermark were already
-            // dropped upstream, but guard anyway for the ttl=0 edge.
-            state.setTimeoutTimestamp(
-              math.max(maxTs, state.getCurrentWatermarkMs() + 1) + stateTtlMs)
-            verdicts.iterator
-          }
-      }
-    judged.union(short)
-  }
-
-  /** Query-scoped lifecycle: run `release` exactly once when `q`
-    * terminates — also when it died before the listener was added (the
-    * died-in-first-batch race), which the `isActive` check after
-    * registration catches. A long-lived session may run many streams —
-    * frozen reference tables must not outlive their query. */
-  private[streaming] def releaseOnTermination(q: StreamingQuery)(
-      release: => Unit): StreamingQuery = {
-    val streams = q.sparkSession.streams
-    val once = new java.util.concurrent.atomic.AtomicBoolean(false)
-    def fire(l: org.apache.spark.sql.streaming.StreamingQueryListener): Unit =
-      if (once.compareAndSet(false, true)) {
-        release
-        streams.removeListener(l)
-      }
-    val listener = new org.apache.spark.sql.streaming.StreamingQueryListener {
-      import org.apache.spark.sql.streaming.StreamingQueryListener._
-      override def onQueryStarted(e: QueryStartedEvent): Unit = ()
-      override def onQueryProgress(e: QueryProgressEvent): Unit = ()
-      override def onQueryTerminated(e: QueryTerminatedEvent): Unit =
-        if (e.id == q.id) fire(this)
-    }
-    streams.addListener(listener)
-    if (!q.isActive) fire(listener)
-    q
-  }
-
   /** Streaming SPAN-level decontamination — the on-arrival twin of
     * `doc_decontaminate_spans` (SURVEY §2c #56d): the DISTINCT bench
     * span set is built once ([[graft.operators.Curation.benchSpanSet]],
@@ -370,27 +300,12 @@ object DocStream {
   def decontaminateSpansSink(train: DataFrame, bench: DataFrame,
       outDir: String, checkpointDir: String, n: Int = 8): StreamingQuery = {
     val benchSpans = graft.operators.Curation.benchSpanSet(bench, n)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val q =
-      try train.writeStream
-        .outputMode(OutputMode.Append)
-        .option("checkpointLocation", checkpointDir)
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          // the excision plan scans its input three times (occurrence
-          // postings, word rows, and the reassembly tail) — pin the
-          // batch so a real source is read once per trigger, not three
-          val b = batch.persist(StorageLevel.MEMORY_AND_DISK)
-          try graft.operators.Curation
-            .decontaminateSpansAgainst(b, benchSpans, n)
-            .write.mode("overwrite").parquet(s"$outDir/batch_id=$batchId")
-          finally b.unpersist(blocking = false)
-          ()
-        }
-        .start()
-      catch {
-        case t: Throwable => benchSpans.unpersist(blocking = false); throw t
-      }
-    releaseOnTermination(q)(benchSpans.unpersist(blocking = false))
+    // the excision plan scans its input three times (occurrence
+    // postings, word rows, and the reassembly tail) — pin the batch so
+    // a real source is read once per trigger, not three
+    Delivery.pinnedFor(benchSpans)(
+      Delivery.sink(train, outDir, checkpointDir, pinBatch = true)(
+        graft.operators.Curation.decontaminateSpansAgainst(_, benchSpans, n)))
   }
 
   /** Streaming benchmark decontamination (the incremental twin of
@@ -406,32 +321,18 @@ object DocStream {
     * other, so the union of per-batch outputs IS the batch operator's
     * result over the full stream — parity by construction (pinned by
     * DecontaminateSpec). Output is idempotent under micro-batch replay:
-    * each batch overwrites its own batch_id=N subtree, the same
-    * exactly-once pattern as EventStream.batchedSink. */
+    * each batch overwrites its own [[Delivery]] batch-dir subtree. */
   def decontaminateSink(train: DataFrame, bench: DataFrame, outDir: String,
       checkpointDir: String, n: Int = 5, minShared: Long = 5L): StreamingQuery = {
     val benchGrams = graft.operators.TextDedup
       .gramPostings(bench, n, "bench_id")
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val q =
-      try train.writeStream
-        .outputMode(OutputMode.Append)
-        .option("checkpointLocation", checkpointDir)
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          graft.operators.TextDedup.gramPostings(batch, n, "train_id")
-            .join(benchGrams, "shingle")
-            .groupBy("train_id", "bench_id")
-            .agg(count(lit(1)).as("n_shared"))
-            .filter(col("n_shared") >= minShared)
-            .write.mode("overwrite").parquet(s"$outDir/batch_id=$batchId")
-          ()
-        }
-        .start()
-      catch {
-        // start() failed: no query will ever terminate — free the cache
-        case t: Throwable => benchGrams.unpersist(blocking = false); throw t
-      }
-    releaseOnTermination(q)(benchGrams.unpersist(blocking = false))
+    Delivery.pinnedFor(benchGrams)(
+      Delivery.sink(train, outDir, checkpointDir)(batch =>
+        graft.operators.TextDedup.gramPostings(batch, n, "train_id")
+          .join(benchGrams, "shingle")
+          .groupBy("train_id", "bench_id")
+          .agg(count(lit(1)).as("n_shared"))
+          .filter(col("n_shared") >= minShared)))
   }
 
   /** Streaming FUZZY decontamination — the on-arrival twin of
@@ -448,32 +349,21 @@ object DocStream {
       outDir: String, checkpointDir: String, n: Int = 3, k: Int = 16,
       bands: Int = 4, tau: Double = 0.5,
       md5Hash: Boolean = false): StreamingQuery = {
-    val benchSigs = graft.operators.TextDedup
-      .fuzzySigs(bench, n, k, md5Hash)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val q =
-      try train.writeStream
-        .outputMode(OutputMode.Append)
-        .option("checkpointLocation", checkpointDir)
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          // per-batch lifecycle: the batch signature table feeds both
-          // the band join and the verification join, so cache it for
-          // exactly this batch (a CacheScope persist would accumulate
-          // for the lifetime of the stream)
-          val sigs = graft.operators.TextDedup
-            .fuzzySigs(batch, n, k, md5Hash)
-            .persist(StorageLevel.MEMORY_AND_DISK)
-          try graft.operators.TextDedup
-            .crossCorpusFuzzySigsJoin(sigs, benchSigs, k, bands, tau)
-            .write.mode("overwrite").parquet(s"$outDir/batch_id=$batchId")
-          finally sigs.unpersist(blocking = false)
-          ()
-        }
-        .start()
-      catch {
-        case t: Throwable => benchSigs.unpersist(blocking = false); throw t
-      }
-    releaseOnTermination(q)(benchSigs.unpersist(blocking = false))
+    val benchSigs = graft.operators.TextDedup.fuzzySigs(bench, n, k, md5Hash)
+    Delivery.pinnedFor(benchSigs)(
+      Delivery.foreachBatch(train, checkpointDir) { (batch, batchId) =>
+        // per-batch lifecycle: the batch signature table feeds both
+        // the band join and the verification join, so cache it for
+        // exactly this batch (a CacheScope persist would accumulate
+        // for the lifetime of the stream)
+        val sigs = graft.operators.TextDedup
+          .fuzzySigs(batch, n, k, md5Hash)
+          .persist(StorageLevel.MEMORY_AND_DISK)
+        try Delivery.write(graft.operators.TextDedup
+          .crossCorpusFuzzySigsJoin(sigs, benchSigs, k, bands, tau),
+          outDir, batchId)
+        finally sigs.unpersist(blocking = false)
+      })
   }
 
   /** Streaming per-domain admission cap (the incremental twin of
@@ -520,18 +410,11 @@ object DocStream {
     * of per-batch outputs IS the batch `scoreWithLm` over the full
     * stream — parity by construction, pinned by DomainCapStreamSpec.
     * Idempotent under micro-batch replay: each batch overwrites its
-    * own batch_id=N subtree. */
+    * own [[Delivery]] batch-dir subtree. */
   def lmScoreSink(docs: DataFrame, lm: graft.queries.Scoring.LmModel,
       outDir: String, checkpointDir: String): StreamingQuery =
-    docs.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.queries.Scoring.scoreWithLm(batch, lm)
-          .write.mode("overwrite").parquet(s"$outDir/batch_id=$batchId")
-        ()
-      }
-      .start()
+    Delivery.sink(docs, outDir, checkpointDir)(
+      graft.queries.Scoring.scoreWithLm(_, lm))
 
   /** Streaming LM count MAINTENANCE — the TRAIN side of the
     * train/score split ([[lmScoreSink]] is the score side): each
@@ -546,18 +429,11 @@ object DocStream {
     * (LmStreamDomainCapSpec pins stream-absorbed == one-shot). */
   def lmCountsSink(docs: DataFrame, outDir: String,
       checkpointDir: String): StreamingQuery =
-    docs.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val c = graft.queries.Scoring.lmCounts(batch)
-        c.pairs.write.mode("overwrite")
-          .parquet(s"$outDir/pairs/batch_id=$batchId")
-        c.words.write.mode("overwrite")
-          .parquet(s"$outDir/words/batch_id=$batchId")
-        ()
-      }
-      .start()
+    Delivery.foreachBatch(docs, checkpointDir) { (batch, batchId) =>
+      val c = graft.queries.Scoring.lmCounts(batch)
+      Delivery.write(c.pairs, s"$outDir/pairs", batchId)
+      Delivery.write(c.words, s"$outDir/words", batchId)
+    }
 
   /** Streaming quality-model count MAINTENANCE — the TRAIN side of
     * [[qualityScoreSink]]'s split. Quality counts are ORDERED float
@@ -575,29 +451,24 @@ object DocStream {
     * shape of an append-only document stream. */
   def qcCountsSink(docs: DataFrame, stateDir: String,
       checkpointDir: String): StreamingQuery =
-    docs.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        val base = new org.apache.hadoop.fs.Path(stateDir)
-        val fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        val prev =
-          if (fs.exists(base))
-            fs.listStatus(base).map(_.getPath.getName)
-              .filter(_.matches("v\\d+")).map(_.drop(1).toLong)
-              .filter(_ < batchId).sorted.lastOption
-          else None
-        val counts = prev match {
-          case Some(p) => graft.queries.Scoring.qcAppend(
-            graft.queries.Scoring.loadQualityCounts(spark, s"$stateDir/v$p"),
-            batch)
-          case None => graft.queries.Scoring.qcCounts(batch)
-        }
-        graft.queries.Scoring.saveQualityCounts(counts, s"$stateDir/v$batchId")
-        ()
+    Delivery.foreachBatch(docs, checkpointDir) { (batch, batchId) =>
+      val spark = batch.sparkSession
+      val base = new org.apache.hadoop.fs.Path(stateDir)
+      val fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      val prev =
+        if (fs.exists(base))
+          fs.listStatus(base).map(_.getPath.getName)
+            .filter(_.matches("v\\d+")).map(_.drop(1).toLong)
+            .filter(_ < batchId).sorted.lastOption
+        else None
+      val counts = prev match {
+        case Some(p) => graft.queries.Scoring.qcAppend(
+          graft.queries.Scoring.loadQualityCounts(spark, s"$stateDir/v$p"),
+          batch)
+        case None => graft.queries.Scoring.qcCounts(batch)
       }
-      .start()
+      graft.queries.Scoring.saveQualityCounts(counts, s"$stateDir/v$batchId")
+    }
 
   /** Streaming learned-quality scoring (the incremental twin of
     * `doc_quality_classifier`'s scoring stage): every micro-batch is
@@ -611,15 +482,8 @@ object DocStream {
   def qualityScoreSink(docs: DataFrame,
       model: graft.queries.Scoring.QualityModel,
       outDir: String, checkpointDir: String): StreamingQuery =
-    docs.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.queries.Scoring.scoreWithQualityModel(batch, model)
-          .write.mode("overwrite").parquet(s"$outDir/batch_id=$batchId")
-        ()
-      }
-      .start()
+    Delivery.sink(docs, outDir, checkpointDir)(
+      graft.queries.Scoring.scoreWithQualityModel(_, model))
 
   /** Streaming BPE token counting (the incremental twin of
     * `doc_bpe_tokens`' encode stage): every micro-batch is encoded
@@ -635,15 +499,8 @@ object DocStream {
   def bpeCountSink(docs: DataFrame,
       model: graft.operators.BpeTokenizer.BpeModel,
       outDir: String, checkpointDir: String): StreamingQuery =
-    docs.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.operators.BpeTokenizer.encodeCounts(batch, model)
-          .write.mode("overwrite").parquet(s"$outDir/batch_id=$batchId")
-        ()
-      }
-      .start()
+    Delivery.sink(docs, outDir, checkpointDir)(
+      graft.operators.BpeTokenizer.encodeCounts(_, model))
 
   /** Doc-level keep/drop decisions from per-band verdicts: a doc is a
     * dup iff ANY band flagged it; dup_of = the smallest flagged
@@ -670,30 +527,21 @@ object DocStream {
     * parity by construction — the verdict is per-row). Output per
     * doc: (doc_id, admit, nn_id, nn_qcos). */
   def textSemanticAdmitSink(docs: DataFrame,
-      index0: graft.operators.Similarity.IvfPqIndex, tau: Double,
+      index: graft.operators.Similarity.IvfPqIndex, tau: Double,
       nprobe: Int, outDir: String, checkpointDir: String,
-      refineWith: Option[(DataFrame, Int)] = None): StreamingQuery = {
+      refineWith: Option[(DataFrame, Int)] = None): StreamingQuery =
     // pin the frozen index for the query lifetime (r21, the
     // semanticAdmitSink discipline): per-trigger parquet re-reads of
-    // the artifact frames were pure fixed cost
-    EmbStream.withPinnedIndex(index0)(index => docs.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // the feature build + verdict join scan the batch more than
-        // once; pin it so a real source is read once per trigger
-        val b = batch.persist(StorageLevel.MEMORY_AND_DISK)
-        try {
-          val vecs = graft.operators.TextFeatures.unigramBucketVec(b)
-            .select(col("doc_id").as("vec_id"), col("e"))
-          EmbStream.admitVerdicts(vecs, index, tau, nprobe, refineWith)
-            .withColumnRenamed("vec_id", "doc_id")
-            .write.mode("overwrite").parquet(s"$outDir/batch_id=$batchId")
-        } finally b.unpersist(blocking = false)
-        ()
-      }
-      .start())
-  }
+    // the artifact frames were pure fixed cost. The feature build +
+    // verdict join scan the batch more than once; pin it too so a real
+    // source is read once per trigger
+    Delivery.pinnedFor(index.coarse, index.codebooks, index.codes)(
+      Delivery.sink(docs, outDir, checkpointDir, pinBatch = true) { b =>
+        val vecs = graft.operators.TextFeatures.unigramBucketVec(b)
+          .select(col("doc_id").as("vec_id"), col("e"))
+        EmbStream.admitVerdicts(vecs, index, tau, nprobe, refineWith)
+          .withColumnRenamed("vec_id", "doc_id")
+      })
 
   /** Signature agreement = matching minhash positions / k. */
   def agreement(a: Seq[Int], b: Seq[Int]): Double = {

@@ -2,9 +2,8 @@ package graft.streaming
 
 import graft.operators.Similarity
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.functions.{col, sqrt}
-import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 /** Streaming similarity search against a FROZEN ANN index — the
   * embedding-side sibling of [[DocStream.lmScoreSink]]'s frozen-LM
@@ -52,19 +51,12 @@ object EmbStream {
     // sink must not start cleanly and then kill the streaming query
     require(refineRaw.isEmpty || kShort >= k,
       s"annScoreSink: kShort=$kShort must be >= k=$k when refineRaw is set")
-    queries.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        (refineRaw match {
-          case Some(raw) => Similarity.ivfPqSearchRefine(
-            index, batch, raw, k, kShort, nprobe, excludeSelf)
-          case None =>
-            Similarity.ivfPqSearch(index, batch, k, nprobe, excludeSelf)
-        }).write.mode("overwrite").parquet(s"$outDir/batch_id=$batchId")
-        ()
-      }
-      .start()
+    Delivery.sink(queries, outDir, checkpointDir)(batch => refineRaw match {
+      case Some(raw) => Similarity.ivfPqSearchRefine(
+        index, batch, raw, k, kShort, nprobe, excludeSelf)
+      case None =>
+        Similarity.ivfPqSearch(index, batch, k, nprobe, excludeSelf)
+    })
   }
 
   /** Online semantic-dedup ADMISSION — the ingest-time form of the
@@ -85,60 +77,17 @@ object EmbStream {
     * admitted vectors in through [[ivfPqAppendSink]] +
     * [[Similarity.loadIvfPqIndexWithDeltas]] and re-freezing.
     * Idempotent batch_id=N subtrees. */
-  def semanticAdmitSink(vectors: DataFrame, index0: Similarity.IvfPqIndex,
+  def semanticAdmitSink(vectors: DataFrame, index: Similarity.IvfPqIndex,
       tau: Double, nprobe: Int, outDir: String, checkpointDir: String,
-      refineWith: Option[(DataFrame, Int)] = None): StreamingQuery = {
+      refineWith: Option[(DataFrame, Int)] = None): StreamingQuery =
     // pin the frozen index for the query lifetime (r21): every trigger
     // searches the same artifact frames — without the pin each batch
-    // re-reads them from parquet (per-trigger fixed cost)
-    withPinnedIndex(index0)(index => vectors.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // the verdict joins the batch against its own search result —
-        // two scans; pin it so a real source is read once per trigger
-        val b = batch.persist(
-          org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        try admitVerdicts(b, index, tau, nprobe, refineWith)
-          .write.mode("overwrite").parquet(s"$outDir/batch_id=$batchId")
-        finally b.unpersist(blocking = false)
-        ()
-      }
-      .start())
-  }
-
-  /** Live pins per index, keyed by its frames' canonical plans — the
-    * key the CacheManager shares cached data under, so admission
-    * queries over one index (or over two loads of one artifact) share
-    * one cache entry, and only the last of them to stop releases it. */
-  private val pins = scala.collection.mutable.HashMap.empty[Seq[LogicalPlan], Int]
-
-  /** Start a query (`start`) against `index0` pinned
-    * ([[Similarity.pinIndex]]) for the query's lifetime (r22, ADVICE
-    * r21: multi-query sessions were accumulating pinned artifact
-    * frames). Pins are counted per index, so stopping one of two
-    * admission queries over the same index leaves the other's frames
-    * cached. */
-  private[graft] def withPinnedIndex(index0: Similarity.IvfPqIndex)(
-      start: Similarity.IvfPqIndex => StreamingQuery): StreamingQuery = {
-    val key = Seq(index0.coarse, index0.codebooks, index0.codes)
-      .map(_.queryExecution.analyzed.canonicalized)
-    val index = pins.synchronized {
-      pins(key) = pins.getOrElse(key, 0) + 1
-      Similarity.pinIndex(index0)
-    }
-    def unpin(): Unit = pins.synchronized {
-      val n = pins(key) - 1
-      if (n > 0) pins(key) = n
-      else {
-        pins.remove(key)
-        Seq(index.coarse, index.codebooks, index.codes)
-          .foreach(_.unpersist(blocking = false))
-      }
-    }
-    val q = try start(index) catch { case t: Throwable => unpin(); throw t }
-    DocStream.releaseOnTermination(q)(unpin())
-  }
+    // re-reads them from parquet (per-trigger fixed cost). The verdict
+    // joins the batch against its own search result — two scans; pin
+    // the batch too so a real source is read once per trigger
+    Delivery.pinnedFor(index.coarse, index.codebooks, index.codes)(
+      Delivery.sink(vectors, outDir, checkpointDir, pinBatch = true)(
+        admitVerdicts(_, index, tau, nprobe, refineWith)))
 
   /** The admission verdict for one (vec_id, e) frame against a frozen
     * reference index — the batch core [[semanticAdmitSink]] and
@@ -215,15 +164,8 @@ object EmbStream {
     * (`n_appended`) happens at load, where the delta count is known. */
   def ivfPqAppendSink(vectors: DataFrame, index: Similarity.IvfPqIndex,
       deltaDir: String, checkpointDir: String): StreamingQuery =
-    vectors.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        Similarity.ivfPqEncode(index, batch)
-          .write.mode("overwrite").parquet(s"$deltaDir/batch_id=$batchId")
-        ()
-      }
-      .start()
+    Delivery.sink(vectors, deltaDir, checkpointDir)(
+      Similarity.ivfPqEncode(index, _))
 
   /** Streaming kNN-GRAPH maintenance (r19 — the graph sibling of
     * [[ivfPqAppendSink]]): each arriving micro-batch of vectors
@@ -247,21 +189,11 @@ object EmbStream {
   def knnGraphAppendSink(vectors: DataFrame,
       index: Similarity.IvfPqIndex, k: Int, nprobe: Int,
       deltaDir: String, checkpointDir: String): StreamingQuery =
-    vectors.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // the search plan reads the query side three times (cell
-        // probes, the dense ADC table, the verdict join) — pin the
-        // micro-batch so a real source is scanned once per trigger
-        // (the semanticAdmitSink discipline; unpinned, the
-        // graphappend probe measured 3x source over-read)
-        val b = batch.persist(
-          org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        try graft.operators.KnnGraph.appendDelta(index, b, k, nprobe,
-          deltaDir, batchId)
-        finally b.unpersist(blocking = false)
-        ()
-      }
-      .start()
+    // the search plan reads the query side three times (cell probes,
+    // the dense ADC table, the verdict join) — pin the micro-batch so a
+    // real source is scanned once per trigger (the semanticAdmitSink
+    // discipline; unpinned, the graphappend probe measured 3x source
+    // over-read)
+    Delivery.foreachBatch(vectors, checkpointDir, pinBatch = true)(
+      graft.operators.KnnGraph.appendDelta(index, _, k, nprobe, deltaDir, _))
 }

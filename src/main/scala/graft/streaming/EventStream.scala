@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, DataFrameWriter, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
 import org.apache.spark.sql.types.StructType
@@ -101,29 +101,17 @@ object EventStream {
     graft.operators.Routing.fanoutWithDevice(validated, routes,
       col("event_type"), col("source"), col("dest"))
 
-  /** #19d ship (kinesis_sender.go:92-100): foreachBatch sink writing one
-    * parquet dir per stream, each file capped at 500 records — the
-    * PutRecords batch limit. Partition key column = stream.
-    *
-    * Idempotent under micro-batch REPLAY: each batch overwrites its own
-    * batch_id=N subtree, so a batch re-delivered after a crash replaces
-    * its previous (possibly partial) output instead of appending
-    * duplicates — exactly-once output where the reference settles for
-    * at-least-once with retries (sender retry loop). Readers see
-    * batch_id as a partition column. */
+  /** #19d ship (kinesis_sender.go:92-100): the [[Delivery]] batch-dir
+    * sink writing one parquet dir per stream, each file capped at 500
+    * records — the PutRecords batch limit. Partition key column =
+    * stream. */
   def batchedSink(routed: DataFrame, outDir: String, checkpointDir: String): StreamingQuery =
-    routed.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        batch.write
-          .option("maxRecordsPerFile", 500)
-          .partitionBy("stream")
-          .mode("overwrite")
-          .parquet(s"$outDir/batch_id=$batchId")
-        ()
-      }
-      .start()
+    Delivery.foreachBatch(routed, checkpointDir)((batch, batchId) =>
+      Delivery.write(batch, outDir, batchId, shipped))
+
+  /** The ship writer: per-stream dirs, ≤500 records per file. */
+  private def shipped(w: DataFrameWriter[Row]): DataFrameWriter[Row] =
+    w.option("maxRecordsPerFile", 500).partitionBy("stream")
 
   /** #20 Windowed per-type counts with watermark — the streaming version
     * of the per-event-type Prometheus counters (filter/metrics.go). */
@@ -503,65 +491,57 @@ object EventStream {
     * throw on their own).
     *
     * Delivery unit = the batch_id partition directory: a parquet write
-    * is not atomic at the directory level, so each batch writes under
-    * its own `batch_id=N` partition (dynamic overwrite ⇒ idempotent
-    * under checkpoint replay) and a failed primary attempt SCRUBS its
-    * partial partition before diverting — readers of primaryDir ∪
-    * altDir never see a batch twice. Only transport/IO failures divert
-    * (IOException / SparkException); logic errors (analysis, codegen)
-    * propagate and fail the query instead of silently landing in alt.
+    * is not atomic at the directory level, so each batch overwrites its
+    * own [[Delivery]] batch-dir subtree in the [[batchedSink]] layout
+    * (idempotent under checkpoint replay) and a failed primary attempt
+    * SCRUBS its partial subtree before diverting — readers of
+    * primaryDir ∪ altDir never see a batch twice. Only transport/IO
+    * failures divert (IOException / SparkException); logic errors
+    * (analysis, codegen) propagate and fail the query instead of
+    * silently landing in alt.
     *
     * `maxRetries` mirrors the reference's deliveryRetries
     * (filter/filter.go:30; internal/kinesis retry loop): the primary is
-    * retried that many times before the batch fails over. Dynamic
-    * partition overwrite makes retries idempotent — a half-written
+    * retried that many times before the batch fails over. The
+    * batch-dir overwrite makes retries idempotent — a half-written
     * attempt is replaced wholesale by the next. */
   def failoverSink(routed: DataFrame, primaryDir: String, altDir: String,
       checkpointDir: String,
       failPrimary: (DataFrame, Int) => Boolean = (_, _) => false,
       maxRetries: Int = 0): StreamingQuery =
-    routed.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val stamped = batch.withColumn("batch_id", lit(batchId))
-        def write(dir: String): Unit =
-          stamped.write.option("maxRecordsPerFile", 500)
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id", "stream").mode("overwrite").parquet(dir)
-        def scrub(dir: String): Unit = {
-          val p = new org.apache.hadoop.fs.Path(s"$dir/batch_id=$batchId")
-          p.getFileSystem(batch.sparkSession.sessionState.newHadoopConf())
-            .delete(p, true)
-        }
-        def attemptPrimary(attempt: Int): Unit =
-          try {
-            if (failPrimary(batch, attempt))
-              throw new java.io.IOException("simulated transport failure")
-            write(primaryDir)
-          } catch {
-            case _: java.io.IOException | _: org.apache.spark.SparkException
-                if attempt < maxRetries =>
-              attemptPrimary(attempt + 1)
-          }
-        val primaryOk =
-          try { attemptPrimary(0); true }
-          catch {
-            case _: java.io.IOException | _: org.apache.spark.SparkException =>
-              scrub(primaryDir)
-              write(altDir)
-              false
-          }
-        // symmetric scrub: if a PRIOR epoch diverted this batch to alt
-        // and crashed before its checkpoint committed, the replay that
-        // now succeeds on primary must remove the stale alt partition,
-        // or primaryDir ∪ altDir double-counts the batch. Outside the
-        // catch so a scrub failure fails the epoch (and replays) rather
-        // than diverting an already-delivered batch to alt.
-        if (primaryOk) scrub(altDir)
-        ()
+    Delivery.foreachBatch(routed, checkpointDir) { (batch, batchId) =>
+      def write(dir: String): Unit = Delivery.write(batch, dir, batchId, shipped)
+      def scrub(dir: String): Unit = {
+        val p = new org.apache.hadoop.fs.Path(Delivery.dir(dir, batchId))
+        p.getFileSystem(batch.sparkSession.sessionState.newHadoopConf())
+          .delete(p, true)
       }
-      .start()
+      def attemptPrimary(attempt: Int): Unit =
+        try {
+          if (failPrimary(batch, attempt))
+            throw new java.io.IOException("simulated transport failure")
+          write(primaryDir)
+        } catch {
+          case _: java.io.IOException | _: org.apache.spark.SparkException
+              if attempt < maxRetries =>
+            attemptPrimary(attempt + 1)
+        }
+      val primaryOk =
+        try { attemptPrimary(0); true }
+        catch {
+          case _: java.io.IOException | _: org.apache.spark.SparkException =>
+            scrub(primaryDir)
+            write(altDir)
+            false
+        }
+      // symmetric scrub: if a PRIOR epoch diverted this batch to alt
+      // and crashed before its checkpoint committed, the replay that
+      // now succeeds on primary must remove the stale alt partition,
+      // or primaryDir ∪ altDir double-counts the batch. Outside the
+      // catch so a scrub failure fails the epoch (and replays) rather
+      // than diverting an already-delivered batch to alt.
+      if (primaryOk) scrub(altDir)
+    }
 
   /** #19e Stream-stream interval join: events enriched with the device
     * registration that happened within the hour before the event. Both

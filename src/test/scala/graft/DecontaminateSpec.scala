@@ -137,6 +137,84 @@ class DecontaminateSpec extends AnyFunSuite {
     assert(streamed.exists(_._4 > 0L), "no spans excised; vacuous")
   }
 
+  test("streaming FUZZY decontamination: on-arrival verdicts equal the " +
+    "batch sweep (parity by construction)") {
+    implicit val sql = spark.sqlContext
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    import spark.implicits._
+    val d = "/root/testdata/sf0.001"
+    val docs = Tables.documents(spark, d).select("doc_id", "text")
+    val bench = docs.filter(org.apache.spark.sql.functions
+      .pmod($"doc_id", org.apache.spark.sql.functions.lit(10)) === 0)
+    val train = docs.filter(org.apache.spark.sql.functions
+      .pmod($"doc_id", org.apache.spark.sql.functions.lit(10)) =!= 0)
+      .collect().map(r => (r.getLong(0), r.getString(1)))
+
+    val out = java.nio.file.Files.createTempDirectory("dfuzzy_sink").toString
+    val ckpt = java.nio.file.Files.createTempDirectory("dfuzzy_ckpt").toString
+    val in = MemoryStream[(Long, String)]
+    // the batch query's parameters: md5 family, k = 16, 4 bands, τ 0.5
+    val q = graft.streaming.DocStream.decontaminateFuzzySink(
+      in.toDF().toDF("doc_id", "text"), bench, out, ckpt,
+      n = 3, k = 16, bands = 4, tau = 0.5, md5Hash = true)
+    try {
+      val (b1, b2) = train.splitAt(train.length / 2)
+      in.addData(b1.toSeq); q.processAllAvailable()
+      in.addData(b2.toSeq); q.processAllAvailable()
+    } finally q.stop()
+
+    def key(df: org.apache.spark.sql.DataFrame) = df
+      .select("doc_id", "bench_id", "est_jaccard")
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+    val streamed = key(spark.read.parquet(out))
+    val batch = key(graft.queries.Docs.docDecontaminateFuzzy(spark, d))
+    CacheScope.releaseAll()
+    assert(streamed == batch,
+      s"stream-only: ${streamed -- batch}, batch-only: ${batch -- streamed}")
+    assert(batch.nonEmpty, "corpus has no fuzzy contamination; vacuous")
+  }
+
+  test("decontaminateSink: bench pins are counted — stopping one of two " +
+    "queries over the same bench keeps the other's postings cached") {
+    implicit val sql = spark.sqlContext
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    import spark.implicits._
+    val bench = df(Seq(100L -> benchText))
+    // the frame the sink pins, rebuilt: the cache is keyed by plan
+    def cached: Boolean = TextDedup.gramPostings(bench, 5, "bench_id")
+      .storageLevel != org.apache.spark.storage.StorageLevel.NONE
+    val terminated = new java.util.concurrent.LinkedBlockingQueue[java.util.UUID]()
+    // registered AFTER both sinks' release listeners, so it hears each
+    // termination only once those listeners have run
+    val probe = new org.apache.spark.sql.streaming.StreamingQueryListener {
+      import org.apache.spark.sql.streaming.StreamingQueryListener._
+      override def onQueryStarted(e: QueryStartedEvent): Unit = ()
+      override def onQueryProgress(e: QueryProgressEvent): Unit = ()
+      override def onQueryTerminated(e: QueryTerminatedEvent): Unit =
+        terminated.put(e.id)
+    }
+    def start(): org.apache.spark.sql.streaming.StreamingQuery =
+      graft.streaming.DocStream.decontaminateSink(
+        MemoryStream[(Long, String)].toDF().toDF("doc_id", "text"), bench,
+        java.nio.file.Files.createTempDirectory("dpin_out").toString,
+        java.nio.file.Files.createTempDirectory("dpin_ck").toString)
+    val q1 = start()
+    val q2 = start()
+    spark.streams.addListener(probe)
+    try {
+      assert(cached)
+      q1.stop()
+      assert(terminated.poll(60, java.util.concurrent.TimeUnit.SECONDS) == q1.id)
+      assert(cached, "stopping q1 released bench postings q2 still joins")
+      q2.stop()
+      assert(terminated.poll(60, java.util.concurrent.TimeUnit.SECONDS) == q2.id)
+      assert(!cached, "the last query's stop must release the pin")
+    } finally {
+      q1.stop(); q2.stop()
+      spark.streams.removeListener(probe)
+    }
+  }
+
   test("crossCorpusFuzzy: a light paraphrase of a bench doc is flagged " +
     "with a high estimate, unrelated docs are not, pairs are strictly " +
     "cross-corpus, and md5/murmur3 families agree on the verdicts") {

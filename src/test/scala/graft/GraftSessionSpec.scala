@@ -60,6 +60,22 @@ class GraftSessionSpec extends AnyFunSuite {
     assert(readers.isEmpty, readers.mkString("; "))
   }
 
+  test("register leaves functions an extensions-built session already " +
+    "has in place instead of replacing each with itself") {
+    val s = SparkTest.extSpark
+    val registry = s.sessionState.functionRegistry
+    // every graft function GraftExtensions injected, by its registry entry
+    def graftInfos = registry.listFunction()
+      .flatMap(id => registry.lookupFunction(id).map(id.funcName -> _))
+      .filter(_._2.getClassName.startsWith("graft.functions.")).toMap
+    val before = graftInfos
+    assert(before.contains("simhash64"), before.keys.toString)
+    graft.functions.GraftFunctions.register(s)
+    val after = graftInfos
+    val replaced = before.keys.filterNot(n => after.get(n).exists(_ eq before(n)))
+    assert(replaced.isEmpty, s"re-registered: $replaced")
+  }
+
   test("as-of planner strategy survives a pre-existing session (ensure path)") {
     SparkTest.spark // extensions-less session exists first
     val s = GraftSession.local(4)

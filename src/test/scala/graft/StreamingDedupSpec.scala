@@ -1,6 +1,6 @@
 package graft
 
-import graft.streaming.DocStream
+import graft.streaming.{DocStream, EventTimeTtl}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
@@ -122,31 +122,22 @@ class StreamingDedupSpec extends AnyFunSuite {
     assert(spark.table("dedup_short").filter(col("dup_of").isNotNull).count() == 0)
   }
 
-  test("decisions: doc-level keep/drop from band verdicts; TTL path runs clean") {
+  test("decisions: doc-level keep/drop from band verdicts") {
     implicit val sql = spark.sqlContext
     val base = "alpha beta gamma delta epsilon zeta eta theta iota kappa " * 3
     val in = MemoryStream[(Long, String)]
-    // TTL armed (1 hour — far beyond the test) to exercise the
-    // ProcessingTimeTimeout code path end to end
     val verdicts = DocStream.nearDupVerdicts(
-      in.toDF().toDF("doc_id", "text"), n = 3, k = 16, bands = 4, tau = 0.5,
-      stateTtlMs = 3600000L)
+      in.toDF().toDF("doc_id", "text"), n = 3, k = 16, bands = 4, tau = 0.5)
     val q = verdicts.writeStream.outputMode("append")
-      .format("memory").queryName("dedup_ttl").start()
+      .format("memory").queryName("dedup_decisions").start()
     try {
       in.addData(Seq((1L, base), (2L, "unrelated text entirely here"),
         (3L, base + "tail")))
-      // processAllAvailable() NEVER returns under ProcessingTimeTimeout
-      // (the engine keeps running no-data micro-batches to fire future
-      // timeouts, so noNewData is never signaled — this hung r7's suite).
-      // Bounded-poll the sink for the 12 expected band verdicts instead.
-      val deadline = System.nanoTime() + 120e9.toLong
-      while (spark.table("dedup_ttl").count() < 12 && System.nanoTime() < deadline)
-        Thread.sleep(100)
-      assert(spark.table("dedup_ttl").count() == 12,
-        "timed out waiting for 12 band verdicts (3 docs x 4 bands)")
+      q.processAllAvailable()
     } finally q.stop()
-    val dec = DocStream.decisions(spark.table("dedup_ttl"))
+    assert(spark.table("dedup_decisions").count() == 12,
+      "expected 12 band verdicts (3 docs x 4 bands)")
+    val dec = DocStream.decisions(spark.table("dedup_decisions"))
       .collect().map(r => (r.getLong(0),
         if (r.isNullAt(1)) None else Some(r.getLong(1)),
         r.getBoolean(3))).toSet
@@ -164,10 +155,10 @@ class StreamingDedupSpec extends AnyFunSuite {
     // by the data clock, so processAllAvailable() terminates (at most
     // one no-data batch per watermark advance) and a checkpoint replay
     // would reproduce the same verdicts — unlike ProcessingTimeTimeout.
-    val verdicts = DocStream.nearDupVerdictsEventTime(
-      in.toDF().toDF("doc_id", "text", "ts"), tsCol = "ts",
-      delay = "0 seconds", stateTtlMs = 100000L,
-      n = 3, k = 16, bands = 4, tau = 0.5)
+    val verdicts = DocStream.nearDupVerdicts(
+      in.toDF().toDF("doc_id", "text", "ts"), n = 3, k = 16, bands = 4,
+      tau = 0.5, ttl = Some(EventTimeTtl(tsCol = "ts",
+        delay = "0 seconds", ttlMs = 100000L)))
     val q = verdicts.writeStream.outputMode("append")
       .format("memory").queryName("dedup_et").start()
     try {
@@ -201,10 +192,10 @@ class StreamingDedupSpec extends AnyFunSuite {
     // micro-batch: expiry must stay armed at 400+100, not drop to
     // 300+100 — per-batch max would evict at watermark 450 and forget
     // doc 1 while it is still inside its TTL.
-    val verdicts = DocStream.nearDupVerdictsEventTime(
-      in.toDF().toDF("doc_id", "text", "ts"), tsCol = "ts",
-      delay = "500 seconds", stateTtlMs = 100000L,
-      n = 3, k = 16, bands = 4, tau = 0.5)
+    val verdicts = DocStream.nearDupVerdicts(
+      in.toDF().toDF("doc_id", "text", "ts"), n = 3, k = 16, bands = 4,
+      tau = 0.5, ttl = Some(EventTimeTtl(tsCol = "ts",
+        delay = "500 seconds", ttlMs = 100000L)))
     val q = verdicts.writeStream.outputMode("append")
       .format("memory").queryName("dedup_ooo_et").start()
     try {

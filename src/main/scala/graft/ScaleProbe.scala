@@ -878,7 +878,7 @@ object ScaleProbe {
           // so unrelated centered feature vectors are near-orthogonal),
           // every dupEvery-th image a 1-pixel nudge of its predecessor;
           // REAL decode -> gridFeatureVec -> the PRODUCTION graph path
-          // (ivfPqKnnJoin over pixel features) -> knnGraphDedup; gates
+          // (bulk ivfPqSearchRefine over pixel features) -> knnGraphDedup; gates
           // on planted-pair recall, reports per-stage seconds.
           import spark.implicits._
           val total = n.toInt
@@ -938,10 +938,8 @@ object ScaleProbe {
           // drop true dups on quantization error alone: measured
           // planted recall 0.26 unrefined vs 1.0 refined at 2k)
           val graph = CacheScope.persistTracked(
-            graft.operators.Similarity.refineExactBulk(
-              graft.operators.Similarity.ivfPqKnnJoin(idx, qside, 3,
-                nprobe = 2),
-              qside, feats, k = 3))
+            graft.operators.Similarity.ivfPqSearchRefine(idx, qside, feats,
+              k = 3, kShort = 3, nprobe = 2, bulk = true))
           val gRows = graph.count()
           val graphSecs = (System.nanoTime() - t1g) / 1e9
           val t2d = System.nanoTime()
@@ -984,7 +982,7 @@ object ScaleProbe {
           // ~ 40/256), every dupEvery-th doc a one-word substitution
           // of its predecessor (cos >= 39/40 = 0.975); raw text ->
           // TextFeatures.unigramBucketVec -> the PRODUCTION graph
-          // path (ivfPqKnnJoin shortlists + refineExactBulk exact
+          // path (bulk ivfPqSearch shortlists + exact
           // re-rank — a 0.95 gate needs exact shortlist scores, the
           // mmdedup lesson) -> knnGraphDedup; gates on planted-pair
           // recall, reports per-stage seconds.
@@ -1031,10 +1029,8 @@ object ScaleProbe {
           // top-10 ADC shortlist, EXACT re-rank to k=3 (the 41j
           // refine pattern — a 0.95 gate needs exact shortlist scores)
           val graph = CacheScope.persistTracked(
-            graft.operators.Similarity.refineExactBulk(
-              graft.operators.Similarity.ivfPqKnnJoin(idx, qside, 10,
-                nprobe = nprobe),
-              qside, feats, k = 3))
+            graft.operators.Similarity.ivfPqSearchRefine(idx, qside, feats,
+              k = 3, kShort = 10, nprobe = nprobe, bulk = true))
           val gRows = graph.count()
           val graphSecs = (System.nanoTime() - t1g) / 1e9
           val t2d = System.nanoTime()
@@ -1217,7 +1213,8 @@ object ScaleProbe {
             val qside = v.select(col("vec_id").as("query_id"),
               col("e").as("qe"), col("norm").as("qnorm"))
             graft.operators.KnnGraph.save(
-              graft.operators.Similarity.ivfPqKnnJoin(idx, qside, kk, np),
+              graft.operators.Similarity.ivfPqSearch(idx, qside, kk, np,
+                bulk = true),
               kk, np, gDir.toString)
             val buildSecs = (System.nanoTime() - tb) / 1e9
             CacheScope.releaseAll()
@@ -1382,17 +1379,17 @@ object ScaleProbe {
           val idxDir = java.nio.file.Files.createTempDirectory("pqsprobe")
           try {
             val tb = System.nanoTime()
-            graft.operators.Similarity.savePqIndex(graft.operators.Similarity.pqFit(
+            graft.operators.Similarity.saveIvfPqIndex(graft.operators.Similarity.pqFit(
               v, dim = 64, m = m.toInt, kc = kc.toInt, iters = 3,
               trainN = train.toInt), idxDir.toString)
             val buildSecs = (System.nanoTime() - tb) / 1e9
-            val idx = graft.operators.Similarity.loadPqIndex(spark, idxDir.toString)
+            val idx = graft.operators.Similarity.loadIvfPqIndex(spark, idxDir.toString)
             val exact = exactTopK(v, nQ, kk)
             val qside = broadcast(v.filter(col("vec_id") < nQ)
               .select(col("vec_id").as("query_id"), col("e").as("qe"),
                 col("norm").as("qnorm")))
             val t1 = System.nanoTime()
-            val got = graft.operators.Similarity.pqSearch(idx, qside, kk)
+            val got = graft.operators.Similarity.ivfPqSearch(idx, qside, kk)
               .select("query_id", "neighbor_id")
               .collect().map(r => (r.getLong(0), r.getLong(1)))
             val searchSecs = (System.nanoTime() - t1) / 1e9
@@ -1421,23 +1418,23 @@ object ScaleProbe {
           val idxDir = java.nio.file.Files.createTempDirectory("pqrprobe")
           try {
             val tb = System.nanoTime()
-            graft.operators.Similarity.savePqIndex(graft.operators.Similarity.pqFit(
+            graft.operators.Similarity.saveIvfPqIndex(graft.operators.Similarity.pqFit(
               v, dim = 64, m = m.toInt, kc = kc.toInt, iters = 3,
               trainN = train.toInt), idxDir.toString)
             val buildSecs = (System.nanoTime() - tb) / 1e9
-            val idx = graft.operators.Similarity.loadPqIndex(spark, idxDir.toString)
+            val idx = graft.operators.Similarity.loadIvfPqIndex(spark, idxDir.toString)
             val exact = exactTopK(v, nQ, kk)
             val qside = broadcast(v.filter(col("vec_id") < nQ)
               .select(col("vec_id").as("query_id"), col("e").as("qe"),
                 col("norm").as("qnorm")))
             val t1 = System.nanoTime()
-            val adc = graft.operators.Similarity.pqSearch(idx, qside, kk)
+            val adc = graft.operators.Similarity.ivfPqSearch(idx, qside, kk)
               .select("query_id", "neighbor_id")
               .collect().map(r => (r.getLong(0), r.getLong(1)))
             val adcSecs = (System.nanoTime() - t1) / 1e9
             val adcRecall = adc.count(exact.contains).toDouble / exact.size
             val t2 = System.nanoTime()
-            val ref = graft.operators.Similarity.pqSearchRefine(
+            val ref = graft.operators.Similarity.ivfPqSearchRefine(
                 idx, qside, v.select(col("vec_id"), col("e")), kk, ks)
               .select("query_id", "neighbor_id")
               .collect().map(r => (r.getLong(0), r.getLong(1)))
@@ -1459,7 +1456,7 @@ object ScaleProbe {
             if tag.size <= 1 =>
           // r17: bulk kNN-graph construction — `nq` corpus vectors as
           // a NON-broadcast query side against the full corpus via
-          // ivfPqKnnJoin (map-side probe/tarr, cluster-co-partitioned
+          // bulk ivfPqSearch (map-side probe/tarr, cluster-co-partitioned
           // scoring join). Reports graph rows/s and sampled recall
           // (exact kNN computed for the 50 lowest query ids only —
           // the full exact graph is the quadratic wall this operator
@@ -1482,8 +1479,8 @@ object ScaleProbe {
               .select(col("vec_id").as("query_id"), col("e").as("qe"),
                 col("norm").as("qnorm"))
             val t1 = System.nanoTime()
-            val graph = graft.operators.Similarity.ivfPqKnnJoin(
-              idx, qside, kk, np.toInt)
+            val graph = graft.operators.Similarity.ivfPqSearch(
+              idx, qside, kk, np.toInt, bulk = true)
             val outDir = java.nio.file.Files.createTempDirectory("knnout")
             graph.write.mode("overwrite").parquet(outDir.toString)
             val joinSecs = (System.nanoTime() - t1) / 1e9
@@ -1598,8 +1595,8 @@ object ScaleProbe {
               .select(col("vec_id").as("query_id"), col("e").as("qe"),
                 col("norm").as("qnorm"))
             val t1 = System.nanoTime()
-            val graph = graft.operators.Similarity.ivfPqKnnJoin(
-              idx, qside, kk, np.toInt)
+            val graph = graft.operators.Similarity.ivfPqSearch(
+              idx, qside, kk, np.toInt, bulk = true)
             val gDir = java.nio.file.Files.createTempDirectory("knndgraph")
             graph.write.mode("overwrite").parquet(gDir.toString)
             val graphSecs = (System.nanoTime() - t1) / 1e9
@@ -1740,10 +1737,10 @@ object ScaleProbe {
           val idxDir = java.nio.file.Files.createTempDirectory("pqprobe")
           try {
             val tb = System.nanoTime()
-            graft.operators.Similarity.savePqIndex(graft.operators.Similarity.pqFit(
+            graft.operators.Similarity.saveIvfPqIndex(graft.operators.Similarity.pqFit(
               v, dim = 64, m = m.toInt, kc = kc.toInt, iters = 3), idxDir.toString)
             val buildSecs = (System.nanoTime() - tb) / 1e9
-            val idx = graft.operators.Similarity.loadPqIndex(spark, idxDir.toString)
+            val idx = graft.operators.Similarity.loadIvfPqIndex(spark, idxDir.toString)
             v.select(col("vec_id"), col("e").cast("array<float>").as("embedding"))
               .write.mode("overwrite").parquet(s"$idxDir/raw32")
             val exact = exactTopK(v, nQ, kk)
@@ -1751,7 +1748,7 @@ object ScaleProbe {
               .select(col("vec_id").as("query_id"), col("e").as("qe"),
                 col("norm").as("qnorm")))
             val t1 = System.nanoTime()
-            val got = graft.operators.Similarity.pqSearch(idx, qside, kk)
+            val got = graft.operators.Similarity.ivfPqSearch(idx, qside, kk)
               .select("query_id", "neighbor_id")
               .collect().map(r => (r.getLong(0), r.getLong(1)))
             val searchSecs = (System.nanoTime() - t1) / 1e9

@@ -31,16 +31,14 @@ object Tables {
     *   (GraftSession), so the cast is identity on the stored micros —
     *   the same instant DuckDB sees reading the file directly.
     *
-    * NOTE: the nanosAsLong flag is a SESSION-wide side effect — any
-    * later TIMESTAMP(NANOS) parquet read in the same session also comes
-    * back as BIGINT. Acceptable here (the events table is the only
-    * nanos source in this corpus); a multi-tenant deployment would set
-    * the flag in the session builder instead. */
+    * The loaders never change the caller's session conf: a
+    * TIMESTAMP(NANOS) footer needs `spark.sql.legacy.parquet.nanosAsLong`,
+    * which [[GraftSession.builder]] sets, and a session without it
+    * fails fast naming that conf (see [[eventsTable]]). */
   def events(s: SparkSession, d: String): DataFrame = {
     import org.apache.spark.sql.functions.{col, expr, timestamp_micros}
     import org.apache.spark.sql.types.{LongType, TimestampNTZType}
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val raw = table(s, d, "events")
+    val raw = eventsTable(s, d)
     raw.schema("ts").dataType match {
       case LongType =>
         raw.withColumn("ts", timestamp_micros(expr("ts div 1000")))
@@ -58,8 +56,7 @@ object Tables {
   def eventsStream(s: SparkSession, d: String): DataFrame = {
     import org.apache.spark.sql.functions.{col, expr, timestamp_micros}
     import org.apache.spark.sql.types.{LongType, TimestampNTZType}
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val physical = table(s, d, "events").schema
+    val physical = eventsTable(s, d).schema
     val raw = s.readStream.schema(physical)
       .option("pathGlobFilter", "events.parquet").parquet(d)
     physical("ts").dataType match {
@@ -70,6 +67,24 @@ object Tables {
       case _ => raw
     }
   }
+
+  /** The raw events scan. Spark rejects a TIMESTAMP(NANOS) column
+    * unless `spark.sql.legacy.parquet.nanosAsLong` is on; rethrow that
+    * as an error naming the conf and where graft sets it, rather than
+    * flipping a session-global read option from inside a loader. */
+  private def eventsTable(s: SparkSession, d: String): DataFrame =
+    try table(s, d, "events")
+    catch {
+      // the footer may be read in a schema-inference job, which wraps
+      // the AnalysisException: match anywhere in the cause chain
+      case e: Exception if Iterator.iterate[Throwable](e)(_.getCause)
+          .takeWhile(_ != null)
+          .exists(t => String.valueOf(t.getMessage).contains("TIMESTAMP(NANOS")) =>
+        throw new IllegalStateException(
+          s"Tables.events: $d/events.parquet stores ts as TIMESTAMP(NANOS); " +
+            "read it on a session with spark.sql.legacy.parquet.nanosAsLong=true " +
+            "(GraftSession.builder sets it)", e)
+    }
 
   def documents(s: SparkSession, d: String): DataFrame = table(s, d, "documents")
   def embeddings(s: SparkSession, d: String): DataFrame = table(s, d, "embeddings")

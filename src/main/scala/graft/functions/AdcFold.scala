@@ -9,9 +9,9 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType}
 
 /** The ADC scoring fold — Σ_s tarr[s·kc + codes[s]] — as a native
   * codegen'd Catalyst expression: the hot path of every PQ-family
-  * search ([[graft.operators.Similarity]] pqSearch / ivfPqSearch /
-  * ivfPqKnnJoin scores ONE of these per (query, candidate) pair, so a
-  * bulk kNN join evaluates it hundreds of millions of times).
+  * search ([[graft.operators.Similarity]] ivfPqSearch, broadcast or
+  * bulk, scores ONE of these per (query, candidate) pair, so a bulk
+  * kNN-graph build evaluates it hundreds of millions of times).
   *
   * The composable alternative — aggregate(zip_with(codes,
   * sequence(0, m−1), (c, s) ⇒ element_at(tarr, s·kc+c+1)), 0d, +) —
@@ -25,7 +25,7 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType}
   * NULL semantics match the HOF on every reachable input: a null code
   * or a null table entry nulls the whole sum. On the UNREACHABLE
   * out-of-bounds slot (an assigned code always has a table slot — the
-  * adcTable contract) the kernel NULLs where the HOF under Spark 4
+  * dense ADC table contract) the kernel NULLs where the HOF under Spark 4
   * ANSI eval threw and failed the query — the strictly safer edge,
   * pinned in AdcFoldSpec. The
   * HOF additionally read `m` as a literal; since r18 the kernel does

@@ -25,7 +25,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * ([[graft.operators.BpeTokenizer.BpeLocal.mergeLoop]] — pair-count
   * map + lazy-deletion heap, the Sennrich learn_bpe shape) ONCE on the
   * merged table. One corpus pass, one reduce, no driver collect —
-  * the trainLocal scale split without its loadPqIndex-class driver
+  * the trainLocal scale split without its loadIvfPqIndex-class driver
   * exception.
   *
   * Exactness: byte-for-byte the same merge table as the distributed

@@ -159,7 +159,7 @@ object BpeTokenizer {
     * (Java String.compareTo orders UTF-16 code units, which disagrees
     * with Spark/DuckDB binary collation for supplementary characters —
     * BpeSpec pins the parity, including a surrogate-pair
-    * fixture). The collect is the loadPqIndex-class exception to the
+    * fixture). The collect is the loadIvfPqIndex-class exception to the
     * no-driver-collect rule: vocabulary-sized artifact state, bounded
     * by `maxVocab` (top-`maxVocab` words by (n DESC, word ASC) — the
     * standard frequency-floor truncation; pass Int.MaxValue for exact
@@ -248,7 +248,7 @@ object BpeTokenizer {
   }
 
   /** Persist / reload a [[BpeModel]] (parquet artifact, stamped meta —
-    * the loadPqIndex fail-fast convention: a merge table whose ranks
+    * the loadIvfPqIndex fail-fast convention: a merge table whose ranks
     * disagree with the stamp refuses to load). */
   def save(model: BpeModel, dir: String): Unit = {
     model.merges.write.mode("overwrite").parquet(s"$dir/merges")

@@ -11,7 +11,7 @@ import org.apache.spark.sql.functions._
   * connected components → keep the smallest id per component (the
   * canonical-selection rule the text-dedup family already uses).
   *
-  * Input graph rows are [[Similarity.ivfPqKnnJoin]] output —
+  * Input graph rows are bulk [[Similarity.ivfPqSearch]] output —
   * (query_id, neighbor_id, qcos, …) with query_id ranging over the
   * whole corpus — or any equivalently-shaped kNN edge list (e.g. an
   * exact brute-force graph; GraphDedupSpec pins the two equal at the

@@ -54,7 +54,7 @@ object KnnGraph {
 
   /** Persist a kNN graph (parquet artifact, stamped meta — the
     * [[Similarity.saveIvfPqIndex]] fail-fast convention). `edges` is
-    * any [[Similarity.ivfPqKnnJoin]]-shaped frame; `k`/`nprobe` stamp
+    * any bulk [[Similarity.ivfPqSearch]]-shaped frame; `k`/`nprobe` stamp
     * the build parameters so a loader can reject a graph built with a
     * different budget than the consumer assumes. */
   def save(edges: DataFrame, k: Int, nprobe: Int, dir: String): Unit = {

@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Banded random-hyperplane LSH near-dup mining — the parameterized
@@ -20,6 +21,21 @@ import org.apache.spark.sql.functions._
   * (vec_id, band_idx, band_key) rows shuffle for candidate generation;
   * vectors are fetched once per VERIFIED candidate side, and nothing is
   * ever cartesian.
+  *
+  * The ANN index family has ONE compressed index shape,
+  * [[IvfPqIndex]] (IVFADC, Jégou et al. 2011): flat PQ is the one-cell
+  * index whose only centroid is the origin ([[pqFit]]), so fit,
+  * append, persistence, search and refine are one path. `raw`
+  * ([[ivfSearch]]) and `sq8` ([[sq8Search]]) stay separate — their
+  * oracle twins pin a different arithmetic.
+  *
+  * '''Zero-norm contract.''' Every cosine here goes through one
+  * helper: a zero query or vector norm yields NULL — never a division,
+  * so Spark's ANSI mode cannot fail the query — and a NULL score emits
+  * no row (search/refine) and is never a duplicate (semDedupWithin,
+  * lshNearDupPairs). A zero-norm coarse cell ranks after every
+  * nonzero cell, ties by cluster. Nonzero norms keep the plain
+  * `dot / (na · nb)` bits.
   */
 object Similarity {
 
@@ -37,6 +53,43 @@ object Similarity {
 
   private def dot(a: Column, b: Column): Column =
     graft.functions.DotProduct.column(a, b)
+
+  /** The one cosine: `num / (na · nb)`, or NULL when the norm product
+    * is zero (a zero-norm query, vector or cell). The division only
+    * runs on a nonzero denominator, so ANSI mode never raises
+    * DIVIDE_BY_ZERO here, and nonzero norms keep their exact bits. */
+  private def cosine(num: Column, na: Column, nb: Column): Column = {
+    val denom = na * nb
+    when(denom =!= 0.0, num / denom)
+  }
+
+  /** The one top-k rank window: rows whose `score` is NULL (zero norm)
+    * or NaN are dropped first — Spark sorts NaN above every double, so
+    * an unfiltered NaN would win the rank — then per query_id the
+    * (score DESC, neighbor_id ASC) rank keeps `k`. */
+  private def topK(scored: DataFrame, score: String, k: Int,
+      out: String*): DataFrame = {
+    val w = Window.partitionBy("query_id")
+      .orderBy(col(score).desc, col("neighbor_id").asc)
+    scored.filter(col(score).isNotNull && !isnan(col(score)))
+      .withColumn("rnk", row_number().over(w))
+      .filter(col("rnk") <= k)
+      .select(out.map(col): _*)
+  }
+
+  /** Per-group mean vectors from the MERGEABLE avg aggregate over
+    * (keys, pos) — partial means combine map-side, nothing collects a
+    * per-group value list until the ≤dim-entry reassembly. Returns
+    * (keys, ce, scc). Shared by [[ivfIndex]], the [[kmeans]] update,
+    * the PQ codebook update and the [[ivfPqFit]] final cells. */
+  private def cellMeans(df: DataFrame, keys: Seq[String],
+      e: String): DataFrame =
+    df.select(keys.map(col) :+ posexplode(col(e)).as(Seq("pos", "x")): _*)
+      .groupBy((keys :+ "pos").map(col): _*).agg(avg("x").as("cx"))
+      .groupBy(keys.map(col): _*)
+      .agg(transform(array_sort(collect_list(struct(col("pos"), col("cx")))),
+        t => t.getField("cx")).as("ce"))
+      .withColumn("scc", dot(col("ce"), col("ce")))
 
   /** IVF ANN — the production-scale path: coarse centroids from the
     * MERGEABLE avg aggregate (partial means combine map-side; nothing
@@ -74,12 +127,9 @@ object Similarity {
       s"ivfIndex: cluster_by must be int or bigint (the NearestCosine " +
         s"assignment kernel's cluster type), got " +
         v.schema("cluster_by").dataType.catalogString + " — cast it first")
-    v.select(col("cluster_by"), posexplode(col("e")).as(Seq("pos", "x")))
-      .groupBy("cluster_by", "pos").agg(avg("x").as("cx"))
-      .groupBy(col("cluster_by").as("cluster"))
-      .agg(transform(array_sort(collect_list(struct(col("pos"), col("cx")))),
-        t => t.getField("cx")).as("ce"))
-      .withColumn("cnorm", sqrt(dot(col("ce"), col("ce"))))
+    cellMeans(v.select(col("cluster_by").as("cluster"), col("e")),
+        Seq("cluster"), "e")
+      .select(col("cluster"), col("ce"), sqrt(col("scc")).as("cnorm"))
   }
 
   def ivfAnn(v: DataFrame, isQuery: Column, k: Int, nprobe: Int = 1): DataFrame =
@@ -110,34 +160,29 @@ object Similarity {
     * nearest cells. */
   def ivfSearch(v: DataFrame, cent: DataFrame, isQuery: Column, k: Int,
       nprobe: Int = 1): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     require(nprobe >= 1, s"ivfSearch: nprobe must be >= 1, got $nprobe")
     val assigned = ivfAssign(v.withColumn("is_q", isQuery), cent)
     // query side probes its nprobe nearest cells — the per-cell sim
     // rows exist ONLY for the (tiny) query subset, never the corpus;
     // identical sim arithmetic and tie-break as the kernel argmax, so
-    // nprobe=1 is exactly the single-cell assignment path
+    // nprobe=1 is exactly the single-cell assignment path (a NULL
+    // zero-norm sim sorts last under DESC)
     val qw = Window.partitionBy("vec_id")
       .orderBy(col("sim").desc, col("cluster").asc)
     val q = broadcast(v.filter(isQuery)
       .crossJoin(broadcast(cent))
-      .withColumn("sim", dot(col("e"), col("ce")) / (col("norm") * col("cnorm")))
+      .withColumn("sim", cosine(dot(col("e"), col("ce")), col("norm"), col("cnorm")))
       .withColumn("crnk", row_number().over(qw))
       .filter(col("crnk") <= nprobe)
       .select(col("vec_id").as("query_id"), col("e").as("qe"),
         col("norm").as("qnorm"), col("cluster")))
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("cos").desc, col("neighbor_id").asc)
-    assigned
+    topK(assigned
       .select(col("vec_id").as("neighbor_id"), col("e"), col("norm"),
         col("cluster"))
       .join(q, "cluster")
       .filter(col("neighbor_id") =!= col("query_id"))
-      .withColumn("cos", dot(col("e"), col("qe")) / (col("norm") * col("qnorm")))
-      .filter(!isnan(col("cos")))
-      .withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= k)
-      .select("query_id", "neighbor_id", "rnk", "cos", "cluster")
+      .withColumn("cos", cosine(dot(col("e"), col("qe")), col("norm"), col("qnorm"))),
+      "cos", k, "query_id", "neighbor_id", "rnk", "cos", "cluster")
   }
 
   /** Distributed Lloyd's k-means over (vec_id, e: array<double>) — the
@@ -197,7 +242,7 @@ object Similarity {
     // never the raw ids — no Int overflow at 100 TB id spaces, and for
     // dense 0-based ids rank-1 == vec_id, so nothing downstream (or in
     // the oracle twin) changes.
-    val seedW = org.apache.spark.sql.expressions.Window.orderBy("vec_id")
+    val seedW = Window.orderBy("vec_id")
     var cent = tv.orderBy("vec_id").limit(k)
       .withColumn("cluster", row_number().over(seedW) - 1)
       .select(col("cluster"), col("e").as("ce"))
@@ -219,15 +264,7 @@ object Similarity {
     var assigned: DataFrame = null
     for (it <- 1 to iters) {
       assigned = assign(tv, cent)
-      if (it < iters)
-        cent = assigned
-          .select(col("cluster"), posexplode(col("e")).as(Seq("pos", "x")))
-          .groupBy("cluster", "pos").agg(avg("x").as("cx"))
-          .groupBy("cluster")
-          .agg(transform(
-            array_sort(collect_list(struct(col("pos"), col("cx")))),
-            t => t.getField("cx")).as("ce"))
-          .withColumn("scc", dot(col("ce"), col("ce")))
+      if (it < iters) cent = cellMeans(assigned, Seq("cluster"), "e")
     }
     // sampled training: the loop above only ever touched the sample;
     // pay the full-corpus scan exactly once, against the converged
@@ -236,28 +273,163 @@ object Similarity {
     assigned.select("vec_id", "cluster", "d2")
   }
 
-  /** A product-quantization index (Jégou et al. 2011): `codebooks` =
-    * (s, code, ce, scc) — kc k-means centroids per subspace s —,
-    * `codes` = (vec_id, codes array<int>, dnorm) with dnorm the
-    * decoded-vector norm precomputed at build (query-independent, the
-    * sq8Index dnorm pattern), and `meta` = one row (m, dim, kc, iters)
-    * so a persisted index carries its own parameters (the pair-graph
-    * stamping rule: readers fail fast on mismatch instead of silently
-    * searching with the wrong slicing). All three are plain DataFrames
-    * — write to parquet, read back, search. */
-  final case class PqIndex(m: Int, dim: Int, kc: Int, codebooks: DataFrame,
-      codes: DataFrame, meta: DataFrame)
-
   /** Map-side argmin over a centroid-struct array (fields cluster, ce,
     * scc): the lexicographic min over (d2, cluster), order-independent
     * in the scan, so a collect_list's nondeterministic order cannot
-    * change the winner. Shared by [[kmeans]] and [[pqFit]]. Delegates
-    * to the native [[graft.functions.NearestCode]] kernel — one tight
-    * primitive loop per row instead of an interpreted aggregate() fold
-    * frame per centroid (~50× on the pqFit assignment step), with
-    * bit-identical arithmetic (see the kernel scaladoc). */
+    * change the winner. Shared by [[kmeans]], the coarse assignment
+    * and the PQ encode. Delegates to the native
+    * [[graft.functions.NearestCode]] kernel — one tight primitive loop
+    * per row instead of an interpreted aggregate() fold frame per
+    * centroid (~50× on the pqFit assignment step), with bit-identical
+    * arithmetic (see the kernel scaladoc). */
   private def nearestFold(cs: Column, e: Column, see: Column): Column =
     graft.functions.NearestCode.column(cs, e, see)
+
+  /** An IVFADC index (Jégou et al. 2011 §IV — the canonical
+    * billion-scale ANN architecture): `coarse` = (cluster, ce, scc)
+    * cell centroids, `codebooks` = (s, code, ce, scc) PQ codebooks
+    * trained on the RESIDUALS e − cell(e), `codes` = (vec_id, cluster,
+    * codes, dnorm) with dnorm the full decoded-vector norm |cc + r̂|
+    * precomputed at build (query-independent — the cell/code cross
+    * terms dot(cc_s, ce) are build-time constants), `meta` = one
+    * stamped row (m, dim, kc, k_coarse, iters, n_appended, n_base) so
+    * readers fail fast on a mismatch instead of silently searching
+    * with the wrong slicing. Four plain DataFrames — write to parquet,
+    * read back, search.
+    *
+    * Flat PQ is the `kCoarse = 1` index whose one cell is the origin
+    * ([[pqFit]]): the residual is e − 0 = e exactly and every cross
+    * term folds to +0.0, so its codes, dnorms and scores carry the
+    * bits of a coarse-free PQ index. */
+  final case class IvfPqIndex(m: Int, dim: Int, kc: Int, kCoarse: Int,
+      coarse: DataFrame, codebooks: DataFrame, codes: DataFrame,
+      meta: DataFrame)
+
+  /** Split `e` into `m` contiguous `sub`-wide subvectors: one row per
+    * (keep…, s) with the subvector `es` and its squared norm `see`. */
+  private def subvectors(df: DataFrame, e: String, m: Int, sub: Int,
+      keep: String*): DataFrame =
+    df.select(keep.map(col) :+ explode(array((0 until m).map(s =>
+        struct(lit(s).as("s"), slice(col(e), s * sub + 1, sub).as("es"))): _*))
+        .as("w"): _*)
+      .select(keep.map(col) ++ Seq(col("w.s").as("s"), col("w.es").as("es")): _*)
+      .withColumn("see", dot(col("es"), col("es")))
+
+  /** Frozen-codebook encode: each (s, es, see) subvector row gets the
+    * `code` of its nearest subspace centroid — map-side against the
+    * per-subspace centroid arrays (a ≤m-row broadcast join on s; the
+    * vectors never shuffle). The PQ training step, [[ivfPqAppend]]
+    * and [[ivfPqEncode]] all encode through here. */
+  private def encode(work: DataFrame, codebooks: DataFrame): DataFrame =
+    work.join(broadcast(codebooks.groupBy("s").agg(collect_list(
+        struct(col("code").as("cluster"), col("ce"), col("scc"))).as("cs"))), "s")
+      .withColumn("code",
+        nearestFold(col("cs"), col("es"), col("see")).getField("cluster"))
+      .drop("cs")
+
+  /** Coarse assignment + residual: (vec_id, e, see) rows go to their
+    * nearest cell map-side against the one-row broadcast cell array,
+    * then r = e − cc per element against the broadcast cell centroid.
+    * Returns (vec_id, cluster, r). Shared by the fit and
+    * [[ivfPqEncode]], so appended rows land exactly where built rows
+    * would. */
+  private def residuals(vv: DataFrame, coarse: DataFrame): DataFrame =
+    vv.crossJoin(broadcast(coarse.agg(collect_list(
+        struct(col("cluster"), col("ce"), col("scc"))).as("cs"))))
+      .withColumn("cluster",
+        nearestFold(col("cs"), col("e"), col("see")).getField("cluster"))
+      .join(broadcast(coarse.select(col("cluster"), col("ce").as("cc"))),
+        "cluster")
+      .select(col("vec_id"), col("cluster"),
+        zip_with(col("e"), col("cc"), (a, b) => a - b).as("r"))
+
+  /** PQ codebook training over (vec_id, cluster, e) rows: split each
+    * `dim`-wide vector into `m` subvectors and k-means-quantize each
+    * subspace to `kc` codes. ALL m subspaces train in ONE plan — the
+    * persisted working set is (vec_id, cluster, s, es, see),
+    * assignment is the map-side [[encode]], updates are the mergeable
+    * [[cellMeans]] over (s, code). Seeds are the kc lowest vec_ids of
+    * the train set, by RANK (works for any id space; codes are the
+    * seed ranks 0..kc-1 — the dense ADC slot arithmetic s·kc+code
+    * REQUIRES code < kc, so raw ids must never leak into the code
+    * space). `trainN > 0` iterates only the trainN lowest-xxhash64
+    * vectors and encodes the full set in one final pass (the
+    * [[kmeans]] convention). Returns (codebooks (s, code, ce, scc),
+    * code rows (vec_id, cluster, s, code)). */
+  private def trainCodebooks(v: DataFrame, dim: Int, m: Int, kc: Int,
+      iters: Int, trainN: Int): (DataFrame, DataFrame) = {
+    require(m >= 1 && dim % m == 0, s"pqFit: m=$m must divide dim=$dim")
+    require(kc >= 1 && iters >= 1, s"pqFit: kc=$kc iters=$iters must be >= 1")
+    val work = graft.CacheScope.persistTracked(
+      subvectors(v, "e", m, dim / m, "vec_id", "cluster"))
+    val trainIds = if (trainN > 0) Some(broadcast(
+      v.select(col("vec_id"))
+        .orderBy(xxhash64(col("vec_id")), col("vec_id")).limit(trainN)))
+    else None
+    val tw = trainIds.map(t => graft.CacheScope.persistTracked(
+      work.join(t, "vec_id"))).getOrElse(work)
+    val seedIds = broadcast(
+      trainIds.map(_.select(col("vec_id")))
+        .getOrElse(v.select(col("vec_id")))
+        .orderBy("vec_id").limit(kc)
+        .withColumn("code", row_number().over(Window.orderBy("vec_id")) - 1))
+    var cb = tw.join(seedIds, "vec_id")
+      .select(col("s"), col("code"), col("es").as("ce"))
+      .withColumn("scc", dot(col("ce"), col("ce")))
+    var assigned: DataFrame = null
+    for (it <- 1 to iters) {
+      assigned = encode(tw, cb)
+      if (it < iters) cb = cellMeans(assigned, Seq("s", "code"), "es")
+    }
+    // sampled training: ENCODE the full set in one map-side pass
+    // against the converged codebooks (the loop only read the sample)
+    if (trainN > 0) assigned = encode(work, cb)
+    (cb, assigned.select("vec_id", "cluster", "s", "code"))
+  }
+
+  /** The build-time code fold shared by the fit and [[ivfPqEncode]]:
+    * code rows (vec_id, cluster, s, code) become (vec_id, cluster,
+    * codes, dnorm) in ONE groupBy. Cross terms dot(cc_s, ce) per
+    * (cluster, s, code) make the decoded norm |cc + r̂| a build-time
+    * fold — dnorm² = (scc + 2·Σ_s xterm) + Σ_s scc_code, associated
+    * exactly as written (the oracle twin replays this order). The
+    * coarse scc rides the xterm broadcast (constant per cluster, so
+    * first(scc) folds identically on every matched row). */
+  private def foldCodes(coarse: DataFrame, codebooks: DataFrame,
+      dim: Int, m: Int, codeRows: DataFrame): DataFrame = {
+    def sumByS(c: String): Column = aggregate(
+      transform(array_sort(collect_list(struct(col("s"), col(c)))),
+        t => t.getField(c)),
+      lit(0.0), (acc, x) => acc + x)
+    val xterm = subvectors(coarse, "ce", m, dim / m, "cluster", "scc")
+      .join(codebooks.select(col("s"), col("code"),
+        col("ce"), col("scc").as("rcc")), "s")
+      .select(col("cluster"), col("s"), col("code"),
+        dot(col("es"), col("ce")).as("xt"), col("rcc"), col("scc"))
+    codeRows.join(broadcast(xterm), Seq("cluster", "s", "code"))
+      .groupBy("vec_id")
+      .agg(first(col("cluster")).as("cluster"),
+        transform(array_sort(collect_list(struct(col("s"), col("code")))),
+          t => t.getField("code")).as("codes"),
+        sqrt((first(col("scc")) + lit(2.0) * sumByS("xt")) + sumByS("rcc"))
+          .as("dnorm"))
+  }
+
+  /** Index assembly shared by both fits: fold the code rows and stamp
+    * meta. n_base rides the plan lazily (the [[ivfPqAppend]] bump
+    * discipline): materialized once into parquet by
+    * [[saveIvfPqIndex]], it lets [[needsRefit]] answer from two meta
+    * longs without ever re-executing the encode plan behind `codes`. */
+  private def assemble(v: DataFrame, coarse: DataFrame,
+      codebooks: DataFrame, codeRows: DataFrame, dim: Int, m: Int,
+      kc: Int, kCoarse: Int, iters: Int): IvfPqIndex = {
+    import v.sparkSession.implicits._
+    val meta = Seq((m, dim, kc, kCoarse, iters, 0L))
+      .toDF("m", "dim", "kc", "k_coarse", "iters", "n_appended")
+      .crossJoin(v.agg(count_distinct(col("vec_id")).as("n_base")))
+    IvfPqIndex(m, dim, kc, kCoarse, coarse, codebooks,
+      foldCodes(coarse, codebooks, dim, m, codeRows), meta)
+  }
 
   /** Product quantization — the vector-compression tier beyond SQ8:
     * split each `dim`-wide vector into `m` contiguous subvectors and
@@ -267,400 +439,32 @@ object Similarity {
     * m bytes at kc ≤ 256, a 4·dim/m× compression where SQ8 is fixed
     * 4×.
     *
-    * Scale shape: ALL m subspaces train in ONE plan — the working set
-    * is (vec_id, s, es, see), assignment is the map-side
-    * [[nearestFold]] against per-subspace centroid arrays (a ≤m-row
-    * broadcast join on s; the corpus never shuffles for assignment),
-    * updates are the mergeable avg over (s, code, pos). kc ≥ #distinct
-    * subvectors degenerates to exact reconstruction, which PqSpec pins
-    * to brute-force-identical search — the provably-exact endpoint,
-    * the nprobe=#cells precedent.
+    * The result is the one-cell [[IvfPqIndex]]: `kCoarse = 1`, one
+    * zero centroid (scc = 0), `cluster = 0` on every code row — so
+    * [[ivfPqSearch]], [[ivfPqSearchRefine]], [[ivfPqAppend]] and
+    * [[saveIvfPqIndex]]/[[loadIvfPqIndex]] serve flat PQ unchanged.
+    * kc ≥ #distinct subvectors degenerates to exact reconstruction,
+    * which PqSpec pins to brute-force-identical search — the
+    * provably-exact endpoint, the nprobe=#cells precedent.
     *
     * `trainN > 0` = sampled codebook training, the [[kmeans]]
-    * convention and the 100 TB fit path: Lloyd's rounds iterate only
-    * the trainN lowest-xxhash64 vectors (deterministic, uniform, no
-    * RNG), seeds come from the sample, and the full corpus is ENCODED
-    * in exactly one final map-side pass — codebook quality depends on
+    * convention and the 100 TB fit path: codebook quality depends on
     * the sample's coverage of the distribution, not the corpus size,
     * which is why every production PQ system fits this way (Jégou
-    * et al. 2011 §V). trainN = 0 keeps the pre-existing full-corpus
-    * plan bit for bit. */
+    * et al. 2011 §V). trainN = 0 keeps the full-corpus plan. */
   def pqFit(v: DataFrame, dim: Int, m: Int, kc: Int, iters: Int,
-      trainN: Int = 0): PqIndex = {
-    require(m >= 1 && dim % m == 0, s"pqFit: m=$m must divide dim=$dim")
-    require(kc >= 1 && iters >= 1, s"pqFit: kc=$kc iters=$iters must be >= 1")
-    val sub = dim / m
-    val work = graft.CacheScope.persistTracked(
-      v.select(col("vec_id"), explode(array((0 until m).map(s =>
-          struct(lit(s).as("s"),
-            slice(col("e"), s * sub + 1, sub).as("es"))): _*)).as("w"))
-        .select(col("vec_id"), col("w.s").as("s"), col("w.es").as("es"))
-        .withColumn("see", dot(col("es"), col("es"))))
-    val trainIds = if (trainN > 0) Some(broadcast(
-      v.select(col("vec_id"))
-        .orderBy(xxhash64(col("vec_id")), col("vec_id")).limit(trainN)))
-    else None
-    val tw = trainIds.map(t => graft.CacheScope.persistTracked(
-      work.join(t, "vec_id"))).getOrElse(work)
-    // seeds = the kc lowest vec_ids by RANK (the kmeans convention and
-    // fix — works for any id space, not just dense 0-based); the seed
-    // id set is a ≤kc-row broadcast join against the subspace rows.
-    // Codes are the seed ranks 0..kc-1 — the dense ADC slot arithmetic
-    // (slot = s·kc+code) REQUIRES code < kc, so raw ids must never
-    // leak into the code space.
-    val seedW = org.apache.spark.sql.expressions.Window.orderBy("vec_id")
-    // seeds = the kc lowest vec_ids of the TRAIN set (sample when
-    // trainN > 0) by rank — the kmeans convention
-    val seedIds = broadcast(
-      trainIds.map(_.select(col("vec_id")))
-        .getOrElse(v.select(col("vec_id")))
-        .orderBy("vec_id").limit(kc)
-        .withColumn("code", row_number().over(seedW) - 1))
-    var cb = tw.join(seedIds, "vec_id")
-      .select(col("s"), col("code"), col("es").as("ce"))
-      .withColumn("scc", dot(col("ce"), col("ce")))
-    def assign(set: DataFrame, c: DataFrame): DataFrame = {
-      val cbArr = broadcast(c.groupBy("s").agg(collect_list(
-        struct(col("code").as("cluster"), col("ce"), col("scc"))).as("cs")))
-      set.join(cbArr, "s")
-        .withColumn("best", nearestFold(col("cs"), col("es"), col("see")))
-        .select(col("vec_id"), col("s"), col("es"),
-          col("see"), col("best.cluster").as("code"))
-    }
-    var assigned: DataFrame = null
-    for (it <- 1 to iters) {
-      assigned = assign(tw, cb)
-      if (it < iters)
-        cb = assigned
-          .select(col("s"), col("code"), posexplode(col("es")).as(Seq("pos", "x")))
-          .groupBy("s", "code", "pos").agg(avg("x").as("cx"))
-          .groupBy("s", "code")
-          .agg(transform(
-            array_sort(collect_list(struct(col("pos"), col("cx")))),
-            t => t.getField("cx")).as("ce"))
-          .withColumn("scc", dot(col("ce"), col("ce")))
-    }
-    // sampled training: ENCODE the full corpus in one map-side pass
-    // against the converged codebooks (the loop only read the sample)
-    if (trainN > 0) assigned = assign(work, cb)
-    // decoded norm per vector = sqrt(Σ_s scc of its chosen code) —
-    // query-independent, computed once at build
-    val codes = assigned
-      .join(broadcast(cb.select(col("s"), col("code"), col("scc"))),
-        Seq("s", "code"))
-      .groupBy("vec_id")
-      .agg(
-        transform(array_sort(collect_list(struct(col("s"), col("code")))),
-          t => t.getField("code")).as("codes"),
-        sqrt(aggregate(
-          transform(array_sort(collect_list(struct(col("s"), col("scc")))),
-            t => t.getField("scc")),
-          lit(0.0), (acc, x) => acc + x)).as("dnorm"))
+      trainN: Int = 0): IvfPqIndex = {
     import v.sparkSession.implicits._
-    val meta = Seq((m, dim, kc, iters)).toDF("m", "dim", "kc", "iters")
-    PqIndex(m, dim, kc, cb, codes, meta)
+    val origin = Seq((0, Array.fill(dim)(0.0), 0.0)).toDF("cluster", "ce", "scc")
+    val (cb, codeRows) = trainCodebooks(
+      v.select(col("vec_id"), lit(0).as("cluster"), col("e")),
+      dim, m, kc, iters, trainN)
+    assemble(v, origin, cb, codeRows, dim, m, kc, 1, iters)
   }
-
-  /** ADC top-k cosine search against a prebuilt [[pqFit]] index — the
-    * map-side formulation: per query, ONE dense m·kc-slot lookup array
-    * (dot of each query subvector with each centroid, slot s·kc+code,
-    * holes from empty clusters zero-filled — an assigned code always
-    * exists in the codebook, so a hole is never read) is built on the
-    * broadcast-tiny side; each corpus vector is then scored IN PLACE
-    * by m O(1) array lookups folded in subspace order (deterministic
-    * sum — bit-identical to the tdot sort-fold it replaces), never
-    * touching the original floats and never exploding the corpus: the
-    * scored set is n·nQ rows, not the n·m·nQ join rows of the
-    * relational formulation, and the only corpus shuffle is the top-k
-    * rank window. qcos = Σ_s dot(q_s, c_codes[s]) / (dnorm · qnorm).
-    * `queries` carries (query_id, qe: array<double>, qnorm).
-    *
-    * `excludeSelf` (default true) implements the repo-wide
-    * corpus-member-query convention: query_id shares the vec_id space
-    * and a vector never reports itself as its own neighbor. Pass
-    * false when queries are EXTERNAL vectors whose ids merely happen
-    * to collide with corpus ids (e.g. a stream of new arrivals) —
-    * otherwise an unrelated corpus vector would be silently dropped
-    * from that query's candidates.
-    *
-    * '''Precondition: nonzero norms.''' qcos divides by dnorm·qnorm;
-    * an all-zero query (qnorm = 0) or a vector whose decoded norm is 0
-    * yields NaN, which is DROPPED before the rank window (Spark sorts
-    * NaN above every double, so an unfiltered NaN would win the rank
-    * — the r16 scaladoc claimed the opposite). Cosine similarity is
-    * undefined for the zero vector; a zero-norm query thus returns no
-    * rows rather than NaN garbage (same contract as
-    * [[ivfPqSearch]]/[[sq8Search]]/[[ivfSearch]]). */
-  def pqSearch(index: PqIndex, queries: DataFrame, k: Int,
-      excludeSelf: Boolean = true): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val m = index.m
-    val kc = index.kc
-    val table = broadcast(
-      adcTable(queries, index.codebooks, index.dim, m, kc))
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("qcos").desc, col("neighbor_id").asc)
-    index.codes.crossJoin(table)
-      .filter(if (excludeSelf) col("vec_id") =!= col("query_id") else lit(true))
-      .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        (adcFold(col("codes"), col("tarr"), m, kc) /
-          (col("dnorm") * col("qnorm"))).as("qcos"))
-      .filter(!isnan(col("qcos")))
-      .withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= k)
-      .select("query_id", "neighbor_id", "rnk", "qcos")
-  }
-
-  /** Two-stage refine search (Jégou et al. 2011 §VI "re-ranking with
-    * source coding"; the FAISS `IndexRefineFlat` pattern): ADC
-    * shortlists `kShort` candidates per query from the compressed
-    * codes, then ONLY those candidates are re-scored with EXACT cosine
-    * from the raw float vectors and the true top `k` is returned. This
-    * is the production answer to PQ's lossy recall: the quantized
-    * index does the heavy candidate elimination corpus-stationary, and
-    * the exact pass touches nQ·kShort raw vectors — at 100 TB the raw
-    * floats stay on cheap storage and are only ever read through the
-    * shortlist semi-join (bucket the raw table by vec_id to turn that
-    * scan into a pruned point-lookup), so recall approaches exact
-    * search at a small constant extra cost per query.
-    *
-    * `raw` carries (vec_id, e); norms are derived here, once, with the
-    * same sequential arithmetic as the brute-force baseline, so the
-    * re-ranked qcos is bit-identical to what exact search would emit
-    * for the same pair (PqSpec pins the kShort ≥ corpus endpoint ≡
-    * brute force). Output follows the search convention:
-    * (query_id, neighbor_id, rnk, qcos) with (qcos DESC, neighbor_id
-    * ASC) ranking. */
-  def pqSearchRefine(index: PqIndex, queries: DataFrame, raw: DataFrame,
-      k: Int, kShort: Int, excludeSelf: Boolean = true): DataFrame = {
-    require(kShort >= k,
-      s"pqSearchRefine: kShort=$kShort must be >= k=$k")
-    refineExact(
-      pqSearch(index, queries, kShort, excludeSelf), queries, raw, k)
-  }
-
-  /** [[pqSearchRefine]] over the IVFADC index: cell-probed ADC
-    * shortlist (`nprobe` recall knob), exact cosine re-rank of the
-    * shortlist from the raw vectors. Composes the two recall knobs —
-    * nprobe widens the scored fraction, kShort deepens the exact
-    * pass — without the corpus ever shuffling. */
-  def ivfPqSearchRefine(index: IvfPqIndex, queries: DataFrame,
-      raw: DataFrame, k: Int, kShort: Int, nprobe: Int = 1,
-      excludeSelf: Boolean = true): DataFrame = {
-    require(kShort >= k,
-      s"ivfPqSearchRefine: kShort=$kShort must be >= k=$k")
-    refineExact(
-      ivfPqSearch(index, queries, kShort, nprobe, excludeSelf),
-      queries, raw, k)
-  }
-
-  /** Exact-cosine re-rank of a (query_id, neighbor_id) shortlist
-    * against the raw vectors. Plan shape: the shortlist is nQ·kShort
-    * rows — it broadcasts into a hash semi-join against the raw scan
-    * (the corpus' only appearance; 2-column pruned read), queries
-    * broadcast for (qe, qnorm), and the final rank window sees only
-    * the shortlist rows. Arithmetic matches the brute-force baseline
-    * exactly: qcos = dot(e, qe) / (sqrt(dot(e,e)) · qnorm), sequential
-    * dots, (qcos DESC, neighbor_id ASC) ties. */
-  private def refineExact(shortlist: DataFrame, queries: DataFrame,
-      raw: DataFrame, k: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val short = broadcast(
-      shortlist.select(col("query_id"), col("neighbor_id")))
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("qcos").desc, col("neighbor_id").asc)
-    raw.select(col("vec_id").as("neighbor_id"), col("e"))
-      .join(short, "neighbor_id")
-      .join(broadcast(queries.select(
-        col("query_id"), col("qe"), col("qnorm"))), "query_id")
-      .select(col("query_id"), col("neighbor_id"),
-        (dot(col("e"), col("qe")) /
-          (sqrt(dot(col("e"), col("e"))) * col("qnorm"))).as("qcos"))
-      .filter(!isnan(col("qcos")))
-      .withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= k)
-      .select("query_id", "neighbor_id", "rnk", "qcos")
-  }
-
-  /** The residual codebooks densified to slot order as ONE broadcast
-    * array row — (slot = s·kc + code; holes from empty clusters
-    * zero-filled: an assigned code always exists, so a hole is never
-    * read — and the kernel's dot against a zero vector reproduces the
-    * old grid join's 0.0 fill bit-for-bit). Shared by [[adcTable]]
-    * (the broadcast search path) and [[ivfPqKnnJoin]] (the bulk
-    * path). */
-  private def denseCodebookArr(spark: org.apache.spark.sql.SparkSession,
-      codebooks: DataFrame, m: Int, kc: Int, sub: Int): DataFrame = {
-    // NOTE (r22): a one-aggregate densification (map_from_entries +
-    // per-slot element_at) was tried and measured SLOWER — element_at
-    // on a Spark map is a linear scan, so filling 4096 slots cost
-    // O(slots²) interpreted probes per search (emb_ann_pq +40%). The
-    // grid left join below is the cheap shape: 4096-row broadcast
-    // join, one sort-collect.
-    val grid = spark.range(m.toLong * kc).select(
-      (col("id") / kc).cast("int").as("s"),
-      (col("id") % kc).cast("int").as("code"))
-    broadcast(grid
-      .join(codebooks.select(col("s"), col("code"), col("ce")),
-        Seq("s", "code"), "left")
-      .withColumn("ce",
-        coalesce(col("ce"), array_repeat(lit(0.0), sub)))
-      .groupBy().agg(transform(
-        array_sort(collect_list(struct(
-          (col("s") * kc + col("code")).as("slot"),
-          struct(col("s"), col("ce")).as("entry")))),
-        t => t.getField("entry")).as("cb")))
-  }
-
-  /** Per-query dense ADC lookup table over a (s, code, ce) codebook
-    * set: (query_id, qnorm, tarr) with tarr[s·kc+code] =
-    * dot(q_s, ce). r21: built MAP-SIDE by the native
-    * [[graft.functions.AdcTable]] kernel against the one-row densified
-    * codebook broadcast — the exact formulation [[ivfPqKnnJoin]]
-    * already uses (bit-identical per slot; IvfPqSpec pins the two
-    * paths equal). The previous relational form — an nQ·m·kc-row grid
-    * crossJoin + left join + a 4096-struct array_sort per query — was
-    * the dominant FIXED cost of every broadcast search and admission
-    * micro-batch (guide §1.2 per-task work: one tight loop per query
-    * vs millions of interpreted join/sort frames). Shared by
-    * [[pqSearch]] and [[ivfPqSearch]]. */
-  private def adcTable(queries: DataFrame, codebooks: DataFrame,
-      dim: Int, m: Int, kc: Int): DataFrame = {
-    val sub = dim / m
-    queries.select(col("query_id"), col("qnorm"), col("qe"))
-      .crossJoin(denseCodebookArr(queries.sparkSession, codebooks, m, kc, sub))
-      .withColumn("tarr",
-        graft.functions.AdcTable.column(col("qe"), col("cb"), sub))
-      .select("query_id", "qnorm", "tarr")
-  }
-
-  /** Σ_s tarr[s·kc + codes[s]] folded in subspace order from 0.0 —
-    * m O(1) lookups per row, deterministic association. Native
-    * codegen'd kernel ([[graft.functions.AdcFold]]) since late r17:
-    * bit-identical to the aggregate(zip_with(…, sequence(0, m−1),
-    * element_at), 0d, +) HOF it replaced (oracle hashes re-gated
-    * unchanged), ~an order of magnitude cheaper per pair — this is
-    * THE per-candidate cost of every PQ-family search, and the bulk
-    * kNN join evaluates it hundreds of millions of times. */
-  private def adcFold(codes: Column, tarr: Column, m: Int,
-      kc: Int): Column =
-    graft.functions.AdcFold.column(codes, tarr, m, kc)
-
-  /** Persist / reload a [[PqIndex]] (parquet artifact). Load validates
-    * the stamped meta row and re-derives m/dim from it — a caller can
-    * not accidentally search a reloaded index with the wrong slicing. */
-  def savePqIndex(index: PqIndex, dir: String): Unit = {
-    index.codebooks.write.mode("overwrite").parquet(s"$dir/codebooks")
-    index.codes.write.mode("overwrite").parquet(s"$dir/codes")
-    index.meta.write.mode("overwrite").parquet(s"$dir/meta")
-  }
-
-  /** Incremental flat-PQ maintenance — the [[ivfPqAppend]] contract
-    * without a coarse layer: new vectors PQ-encode map-side against
-    * the FROZEN per-subspace codebooks (the [[pqFit]] assignment step,
-    * no refit iterations), dnorms fold from the codebook scc exactly
-    * as at build time, codes union, and meta accumulates `n_appended`
-    * so operators refit on drift instead of silently degrading.
-    * (SQ8 needs no append operator at all: [[sq8Index]] rows are
-    * per-vector-independent — its grid is per-row — so appending IS
-    * `index.unionByName(sq8Index(newV))`.) Caller contract: fresh
-    * vec_ids, `newV` carries (vec_id, e). IvfPqSpec's append pins
-    * cover the shared mechanics; PqSpec pins this operator's rows
-    * bit-identical to the fit's own. */
-  def pqAppend(index: PqIndex, newV: DataFrame): PqIndex = {
-    val m = index.m
-    val kc = index.kc
-    val dim = index.dim
-    val sub = dim / m
-    val work = newV.select(col("vec_id"),
-        explode(array((0 until m).map(s =>
-          struct(lit(s).as("s"),
-            slice(col("e"), s * sub + 1, sub).as("es"))): _*)).as("w"))
-      .select(col("vec_id"), col("w.s").as("s"), col("w.es").as("es"))
-      .withColumn("see", dot(col("es"), col("es")))
-    val cbArr = broadcast(index.codebooks.groupBy("s").agg(collect_list(
-      struct(col("code").as("cluster"), col("ce"), col("scc"))).as("cs")))
-    val newCodes = work.join(cbArr, "s")
-      .withColumn("code",
-        nearestFold(col("cs"), col("es"), col("see")).getField("cluster"))
-      .join(broadcast(index.codebooks.select(col("s"), col("code"), col("scc"))),
-        Seq("s", "code"))
-      .groupBy("vec_id")
-      .agg(
-        transform(array_sort(collect_list(struct(col("s"), col("code")))),
-          t => t.getField("code")).as("codes"),
-        sqrt(aggregate(
-          transform(array_sort(collect_list(struct(col("s"), col("scc")))),
-            t => t.getField("scc")),
-          lit(0.0), (acc, x) => acc + x)).as("dnorm"))
-    val metaBase =
-      if (index.meta.columns.contains("n_appended")) index.meta
-      else index.meta.withColumn("n_appended", lit(0L))
-    // counted from the INPUT (one distinct-id scan), not from newCodes:
-    // hanging the encode plan off the 1-row meta would re-encode the
-    // whole batch every time meta materializes (each artifact write,
-    // every later n_appended read)
-    val meta = metaBase
-      .crossJoin(newV.agg(count_distinct(col("vec_id")).as("_batch")))
-      .withColumn("n_appended", col("n_appended") + col("_batch"))
-      .drop("_batch")
-    PqIndex(m, dim, kc, index.codebooks,
-      index.codes.unionByName(
-        newCodes.select(index.codes.columns.map(col): _*)),
-      meta)
-  }
-
-  def loadPqIndex(spark: org.apache.spark.sql.SparkSession,
-      dir: String): PqIndex = {
-    val meta = spark.read.parquet(s"$dir/meta")
-    val row = meta.select("m", "dim", "kc", "iters").collect()
-    require(row.length == 1, s"loadPqIndex: malformed meta at $dir/meta")
-    val (m, kc) = (row(0).getInt(0), row(0).getInt(2))
-    val codebooks = spark.read.parquet(s"$dir/codebooks")
-    val codes = spark.read.parquet(s"$dir/codes")
-    checkPqArtifacts("loadPqIndex", dir, m, kc, codebooks, codes)
-    PqIndex(m, row(0).getInt(1), kc, codebooks, codes, meta)
-  }
-
-  /** Cheap cross-table consistency check at artifact load (ADVICE r15:
-    * the stamped meta alone cannot catch a dir whose codes/codebooks
-    * were written under different parameters — e.g. a partially
-    * overwritten artifact — which would otherwise search with wrong
-    * slicing and return silent garbage). Cost: one full agg over the
-    * SMALL codebook table (≤ m·kc rows) + a LIMIT-1 probe of codes —
-    * never a corpus scan. */
-  private def checkPqArtifacts(who: String, dir: String, m: Int, kc: Int,
-      codebooks: DataFrame, codes: DataFrame,
-      needsCluster: Boolean = false): Unit = {
-    val cb = codebooks.agg(max(col("code")).as("maxc"),
-      countDistinct(col("s")).as("ns")).collect()(0)
-    require(cb.isNullAt(0) || (cb.getInt(0) < kc && cb.getLong(1) <= m),
-      s"$who: $dir codebooks inconsistent with stamped meta " +
-        s"(max code ${cb.get(0)} vs kc=$kc, ${cb.get(1)} subspaces vs m=$m)")
-    if (needsCluster)
-      require(codes.columns.contains("cluster"),
-        s"$who: $dir codes table lacks the IVFADC cluster column")
-    val sample = codes.select(size(col("codes")).as("sz")).limit(1).collect()
-    require(sample.isEmpty || sample(0).getInt(0) == m,
-      s"$who: $dir codes are ${sample(0).getInt(0)}-wide, stamped m=$m")
-  }
-
-  /** An IVFADC index (Jégou et al. 2011 §IV — the canonical
-    * billion-scale ANN architecture): `coarse` = (cluster, ce, scc)
-    * k-means cell centroids, `codebooks` = PQ codebooks trained on the
-    * RESIDUALS e − cell(e), `codes` = (vec_id, cluster, codes, dnorm)
-    * with dnorm the full decoded-vector norm |cc + r̂| precomputed at
-    * build (query-independent — the cell/code cross terms
-    * dot(cc_s, ce) are build-time constants), `meta` = one stamped row
-    * (m, dim, kc, k_coarse, iters). Four plain DataFrames — write to
-    * parquet, read back, search. */
-  final case class IvfPqIndex(m: Int, dim: Int, kc: Int, kCoarse: Int,
-      coarse: DataFrame, codebooks: DataFrame, codes: DataFrame,
-      meta: DataFrame)
 
   /** IVFADC fit: coarse-quantize with [[kmeans]], PQ-quantize the
-    * residuals with [[pqFit]], and precompute everything a search
-    * needs that does not depend on the query.
+    * residuals with the [[pqFit]] trainer, and precompute everything a
+    * search needs that does not depend on the query.
     *
     * Why residuals: within a cell the residual variance is a fraction
     * of the corpus variance, so the same m·kc code budget quantizes
@@ -673,9 +477,9 @@ object Similarity {
     * probes); residual subtraction is a per-row zip_with against the
     * broadcast cell centroid; the cell/code cross-term table
     * (kCoarse·m·kc rows) and the dnorm correction are build-time
-    * joins of small tables against the code set. The only corpus-keyed
-    * shuffles are the one-time build joins on vec_id (attaching
-    * cluster to codes) — search never shuffles the corpus. */
+    * joins of small tables against the code rows. The only wide op on
+    * the corpus is the one-time code fold on vec_id — search never
+    * shuffles the corpus. */
   def ivfPqFit(v: DataFrame, dim: Int, m: Int, kc: Int, kCoarse: Int,
       iters: Int, trainN: Int = 0): IvfPqIndex = {
     require(kCoarse >= 1, s"ivfPqFit: kCoarse=$kCoarse must be >= 1")
@@ -686,20 +490,13 @@ object Similarity {
     // cell means (mergeable avg) — search probes these exact
     // centroids, so the re-assignment inside ivfPqFitWithCoarse does
     // too. With trainN > 0 the Lloyd's rounds (here and in the
-    // residual pqFit) iterate only the sample; the full corpus is
+    // residual trainer) iterate only the sample; the full corpus is
     // touched exactly three times — final cell means below, residual
     // computation, residual encoding — each a single map-side or
     // mergeable-agg pass.
     val asg = kmeans(vv, kCoarse, iters, trainN)
-    val coarse = asg.join(vv, "vec_id")
-      .select(col("cluster"), posexplode(col("e")).as(Seq("pos", "x")))
-      .groupBy("cluster", "pos").agg(avg("x").as("cx"))
-      .groupBy("cluster")
-      .agg(transform(
-        array_sort(collect_list(struct(col("pos"), col("cx")))),
-        t => t.getField("cx")).as("ce"))
-      .withColumn("scc", dot(col("ce"), col("ce")))
-    ivfPqFitWithCoarse(vv, coarse, dim, m, kc, kCoarse, iters, trainN)
+    ivfPqFitWithCoarse(vv, cellMeans(asg.join(vv, "vec_id"), Seq("cluster"), "e"),
+      dim, m, kc, kCoarse, iters, trainN)
   }
 
   /** [[ivfPqFit]] with a caller-supplied coarse table (cluster, ce,
@@ -711,7 +508,7 @@ object Similarity {
     * Both `coarse` and the residual assignment are persisted before
     * anything consumes them twice: the kmeans-seeded coarse lineage
     * ends in a mergeable avg whose float combine order Spark does not
-    * fix, so independent re-evaluations (codes join, each broadcast,
+    * fix, so independent re-evaluations (codes fold, each broadcast,
     * the artifact's separate writes) could disagree in the last ulp
     * and flip a boundary vector's cell between the residual codes and
     * their stamped cluster — persisting pins ONE evaluation for every
@@ -725,112 +522,59 @@ object Similarity {
       else v.select(col("vec_id"), col("e"))
         .withColumn("see", dot(col("e"), col("e")))
     val coarse = graft.CacheScope.persistTracked(coarse0)
-    val coarseArr = broadcast(coarse.agg(collect_list(
-      struct(col("cluster"), col("ce"), col("scc"))).as("cs")))
-    val assigned = graft.CacheScope.persistTracked(
-      vv.crossJoin(coarseArr)
-        .withColumn("cluster",
-          nearestFold(col("cs"), col("e"), col("see")).getField("cluster"))
-        .join(broadcast(coarse.select(col("cluster"), col("ce").as("cc"))),
-          "cluster")
-        .withColumn("r", zip_with(col("e"), col("cc"), (a, b) => a - b))
-        .select(col("vec_id"), col("cluster"), col("r")))
-    val pq = pqFit(assigned.select(col("vec_id"), col("r").as("e")),
+    val assigned = graft.CacheScope.persistTracked(residuals(vv, coarse))
+    val (cb, codeRows) = trainCodebooks(
+      assigned.select(col("vec_id"), col("cluster"), col("r").as("e")),
       dim, m, kc, iters, trainN)
-    val codes = ivfPqCodesWithDnorm(coarse, pq.codebooks, dim, m,
-      pq.codes.drop("dnorm")
-        .join(assigned.select(col("vec_id"), col("cluster")), "vec_id"))
-    import v.sparkSession.implicits._
-    // n_base rides the plan lazily (the ivfPqAppend bump discipline):
-    // materialized once into parquet by saveIvfPqIndex, it lets
-    // needsRefit answer from two meta longs without ever re-executing
-    // the encode plan behind `codes`
-    val meta = Seq((m, dim, kc, kCoarse, iters, 0L))
-      .toDF("m", "dim", "kc", "k_coarse", "iters", "n_appended")
-      .crossJoin(v.agg(count_distinct(col("vec_id")).as("n_base")))
-    IvfPqIndex(m, dim, kc, kCoarse, coarse, pq.codebooks, codes, meta)
+    assemble(v, coarse, cb, codeRows, dim, m, kc, kCoarse, iters)
   }
 
-  /** The build-time dnorm attachment shared by [[ivfPqFitWithCoarse]]
-    * and [[ivfPqAppend]]: cross terms dot(cc_s, ce) per
-    * (cluster, s, code) make the decoded norm |cc + r̂| a build-time
-    * fold — dnorm² = (scc + 2·Σ_s xterm) + Σ_s scc_code, associated
-    * exactly as written (the oracle twin replays this order).
-    * `withCodes` carries (vec_id, cluster, codes). */
-  private def ivfPqCodesWithDnorm(coarse: DataFrame, codebooks: DataFrame,
-      dim: Int, m: Int, withCodes: DataFrame): DataFrame = {
-    val sub = dim / m
-    val ccSub = coarse.select(col("cluster"), col("scc"),
-        explode(array((0 until m).map(s =>
-          struct(lit(s).as("s"),
-            slice(col("ce"), s * sub + 1, sub).as("ccs"))): _*)).as("w"))
-      .select(col("cluster"), col("scc"),
-        col("w.s").as("s"), col("w.ccs").as("ccs"))
-    // scc rides the xterm broadcast (r22): ccSub already carries the
-    // coarse scc per cluster, so joining it out here saves the second
-    // broadcast-build job the former coarse.(cluster, scc) join paid
-    // per fit — same value on every matched row (scc is constant per
-    // cluster), so the first(scc) below folds identically.
-    val xterm = ccSub.join(codebooks.select(col("s"), col("code"),
-        col("ce"), col("scc").as("rcc")), "s")
-      .select(col("cluster"), col("s"), col("code"),
-        dot(col("ccs"), col("ce")).as("xt"), col("rcc"), col("scc"))
-    withCodes
-      .select(col("vec_id"), col("cluster"),
-        col("codes"), posexplode(col("codes")).as(Seq("s", "code")))
-      .join(broadcast(xterm), Seq("cluster", "s", "code"))
-      .groupBy("vec_id")
-      .agg(first(col("cluster")).as("cluster"),
-        first(col("codes")).as("codes"),
-        sqrt((first(col("scc")) + lit(2.0) * aggregate(
-          transform(array_sort(collect_list(struct(col("s"), col("xt")))),
-            t => t.getField("xt")),
-          lit(0.0), (acc, x) => acc + x)) + aggregate(
-          transform(array_sort(collect_list(struct(col("s"), col("rcc")))),
-            t => t.getField("rcc")),
-          lit(0.0), (acc, x) => acc + x)).as("dnorm"))
+  /** Add the row count `n` of `from` to meta's `n_appended` — lazily:
+    * the counter rides the plan, no action here. */
+  private def bumpAppended(meta: DataFrame, from: DataFrame,
+      n: Column): DataFrame = {
+    val base =
+      if (meta.columns.contains("n_appended")) meta
+      else meta.withColumn("n_appended", lit(0L))
+    base.crossJoin(from.agg(n.as("_batch")))
+      .withColumn("n_appended", col("n_appended") + col("_batch"))
+      .drop("_batch")
   }
 
   /** Incremental IVFADC maintenance (VERDICT r15 item 5): append new
     * vectors to a built index WITHOUT refitting. Cells and codebooks
     * stay FROZEN — each new vector is coarse-assigned map-side against
-    * the broadcast cell table (the exact [[ivfPqFitWithCoarse]]
-    * assignment expression), its residual is PQ-encoded against the
-    * frozen per-subspace codebooks (the [[pqFit]] assignment step, no
-    * refit iterations), and its dnorm is the same build-time xterm
-    * fold — so appended rows are indistinguishable from built rows at
-    * search time. No corpus-keyed shuffle anywhere: the only wide op
-    * is the per-vector groupBy(vec_id) fold of the new batch itself.
+    * the broadcast cell table (the exact fit assignment expression),
+    * its residual is PQ-encoded against the frozen per-subspace
+    * codebooks (the training encode step, no refit iterations), and
+    * its dnorm is the same build-time xterm fold — so appended rows
+    * are indistinguishable from built rows at search time. No
+    * corpus-keyed shuffle anywhere: the only wide op is the per-vector
+    * groupBy(vec_id) fold of the new batch itself. A [[pqFit]] index
+    * appends the same way (its one cell takes every vector).
+    * (SQ8 needs no append operator at all: [[sq8Index]] rows are
+    * per-vector-independent, so appending IS
+    * `index.unionByName(sq8Index(newV))`.)
     *
     * Staleness is tracked, not hidden: meta's `n_appended` accumulates
-    * the appended row count so operators can refit once drift matters
-    * (frozen centroids quantize a drifting distribution progressively
-    * worse — the standard IVF maintenance trade). At the exact
-    * endpoint (kc ≥ distinct subvectors, nprobe = kCoarse) appended
-    * and refit indexes search IDENTICALLY (IvfPqSpec pins it); away
-    * from it the frozen-codebook approximation degrades gracefully
-    * with batch drift.
+    * the appended vec_id count — counted from the INPUT (one
+    * distinct-id scan), not the encode plan, which would otherwise
+    * re-run on every meta read — so operators can refit once drift
+    * matters (frozen centroids quantize a drifting distribution
+    * progressively worse — the standard IVF maintenance trade). At the
+    * exact endpoint (kc ≥ distinct subvectors, nprobe = kCoarse)
+    * appended and refit indexes search IDENTICALLY (IvfPqSpec pins
+    * it); away from it the frozen-codebook approximation degrades
+    * gracefully with batch drift.
     *
     * Caller contract: `newV` ids must be fresh (appending an existing
     * vec_id creates a duplicate row, same as writing it twice into any
     * append-only store). */
-  def ivfPqAppend(index: IvfPqIndex, newV: DataFrame): IvfPqIndex = {
-    val appended = ivfPqEncode(index, newV)
-    // lazy staleness bump: the counter rides the plan, no action here
-    // — counted from the INPUT (one distinct-id scan), not the encode
-    // plan, which would otherwise re-run on every meta read
-    val metaBase =
-      if (index.meta.columns.contains("n_appended")) index.meta
-      else index.meta.withColumn("n_appended", lit(0L))
-    val meta = metaBase
-      .crossJoin(newV.agg(count_distinct(col("vec_id")).as("_batch")))
-      .withColumn("n_appended", col("n_appended") + col("_batch"))
-      .drop("_batch")
-    IvfPqIndex(index.m, index.dim, index.kc, index.kCoarse, index.coarse,
-      index.codebooks, index.codes.unionByName(appended), meta)
-  }
+  def ivfPqAppend(index: IvfPqIndex, newV: DataFrame): IvfPqIndex =
+    index.copy(codes = index.codes.unionByName(ivfPqEncode(index, newV)),
+      meta = bumpAppended(index.meta, newV, count_distinct(col("vec_id"))))
 
-  /** The encode-only step of [[ivfPqAppend]]: new vectors
+  /** The encode-only step of [[ivfPqAppend]]: new (vec_id, e) vectors
     * coarse-assigned and residual-PQ-encoded against the FROZEN cells
     * and codebooks, dnorm folded exactly as at build time. Returns
     * rows in the index.codes schema — the unit a streaming append
@@ -838,218 +582,190 @@ object Similarity {
     * ([[graft.streaming.EmbStream.ivfPqAppendSink]]) and
     * [[loadIvfPqIndexWithDeltas]] folds back in. */
   def ivfPqEncode(index: IvfPqIndex, newV: DataFrame): DataFrame = {
-    val m = index.m
-    val kc = index.kc
-    val dim = index.dim
-    val sub = dim / m
     val vv = newV.select(col("vec_id"), col("e"))
       .withColumn("see", dot(col("e"), col("e")))
-    val coarse = index.coarse
-    val coarseArr = broadcast(coarse.agg(collect_list(
-      struct(col("cluster"), col("ce"), col("scc"))).as("cs")))
-    val assigned = vv.crossJoin(coarseArr)
-      .withColumn("cluster",
-        nearestFold(col("cs"), col("e"), col("see")).getField("cluster"))
-      .join(broadcast(coarse.select(col("cluster"), col("ce").as("cc"))),
-        "cluster")
-      .withColumn("r", zip_with(col("e"), col("cc"), (a, b) => a - b))
-      .select(col("vec_id"), col("cluster"), col("r"))
-    val work = assigned
-      .select(col("vec_id"), col("cluster"),
-        explode(array((0 until m).map(s =>
-          struct(lit(s).as("s"),
-            slice(col("r"), s * sub + 1, sub).as("es"))): _*)).as("w"))
-      .select(col("vec_id"), col("cluster"),
-        col("w.s").as("s"), col("w.es").as("es"))
-      .withColumn("see", dot(col("es"), col("es")))
-    val cbArr = broadcast(index.codebooks.groupBy("s").agg(collect_list(
-      struct(col("code").as("cluster"), col("ce"), col("scc"))).as("cs")))
-    val newCodes = work.join(cbArr, "s")
-      .withColumn("code",
-        nearestFold(col("cs"), col("es"), col("see")).getField("cluster"))
-      .groupBy("vec_id")
-      .agg(first(col("cluster")).as("cluster"),
-        transform(array_sort(collect_list(struct(col("s"), col("code")))),
-          t => t.getField("code")).as("codes"))
-    ivfPqCodesWithDnorm(coarse, index.codebooks, dim, m, newCodes)
+    val work = subvectors(residuals(vv, index.coarse), "r", index.m,
+      index.dim / index.m, "vec_id", "cluster")
+    foldCodes(index.coarse, index.codebooks, index.dim, index.m,
+      encode(work, index.codebooks).select("vec_id", "cluster", "s", "code"))
       .select(index.codes.columns.map(col): _*)
+  }
+
+  /** The residual codebooks densified to slot order as ONE broadcast
+    * array row — (slot = s·kc + code; holes from empty clusters
+    * zero-filled: an assigned code always exists, so a hole is never
+    * read — and the kernel's dot against a zero vector reproduces the
+    * old grid join's 0.0 fill bit-for-bit). The per-query dense ADC
+    * table of [[ivfPqSearch]] builds against it. */
+  private def denseCodebookArr(spark: org.apache.spark.sql.SparkSession,
+      codebooks: DataFrame, m: Int, kc: Int, sub: Int): DataFrame = {
+    // NOTE (r22): a one-aggregate densification (map_from_entries +
+    // per-slot element_at) was tried and measured SLOWER — element_at
+    // on a Spark map is a linear scan, so filling 4096 slots cost
+    // O(slots²) interpreted probes per search (emb_ann_pq +40%). The
+    // grid left join below is the cheap shape: 4096-row broadcast
+    // join, one sort-collect — on one partition, so the collect needs
+    // no shuffle stage of its own (the cell-array rule in ivfPqSearch).
+    val grid = spark.range(m.toLong * kc).select(
+      (col("id") / kc).cast("int").as("s"),
+      (col("id") % kc).cast("int").as("code"))
+    broadcast(grid
+      .join(codebooks.select(col("s"), col("code"), col("ce")),
+        Seq("s", "code"), "left")
+      .withColumn("ce",
+        coalesce(col("ce"), array_repeat(lit(0.0), sub)))
+      .coalesce(1).groupBy().agg(transform(
+        array_sort(collect_list(struct(
+          (col("s") * kc + col("code")).as("slot"),
+          struct(col("s"), col("ce")).as("entry")))),
+        t => t.getField("entry")).as("cb")))
   }
 
   /** IVFADC top-k cosine search: each query ranks the coarse cells by
     * cosine (tie toward the lower cluster id — the [[ivfSearch]]
-    * convention), probes its `nprobe` nearest, and scores ONLY the
-    * vectors of those cells: the (query_id, cluster, qdotcc) probe
-    * rows carry the per-query dense residual ADC table and broadcast
-    * into a hash join on cluster, so the corpus never shuffles and
-    * never decodes —
-    * qcos = (dot(q, cc) + Σ_s tarr[s·kc+codes[s]]) / (dnorm·qnorm).
-    * nprobe = kCoarse scores every vector (the recall-1.0 endpoint of
-    * the cell selection; reconstruction error is then the only
-    * approximation — and with kc ≥ corpus that is exact residual
-    * reconstruction, the IvfPqSpec differential pin).
+    * convention; a zero-norm cell ranks after every nonzero cell),
+    * probes its `nprobe` nearest, and scores ONLY the vectors of those
+    * cells, never decoding them:
+    * qcos = (dot(q, cc) + Σ_s tarr[s·kc+codes[s]]) / (dnorm·qnorm),
+    * with tarr[s·kc+code] = dot(q_s, ce) the per-query dense ADC
+    * table built MAP-SIDE by the native [[graft.functions.AdcTable]]
+    * kernel against the one-row densified codebook broadcast, and the
+    * Σ the native [[graft.functions.AdcFold]] kernel (m O(1) lookups
+    * per row, folded in subspace order from 0.0). nprobe = kCoarse
+    * scores every vector (the recall-1.0 endpoint of the cell
+    * selection; reconstruction error is then the only approximation —
+    * and with kc ≥ corpus that is exact residual reconstruction, the
+    * IvfPqSpec differential pin). On a [[pqFit]] index the one origin
+    * cell is always probed and dot(q, 0) = +0.0, so the score is the
+    * flat ADC cosine bit for bit.
     *
-    * Precondition: nonzero query/decoded norms — cosine is undefined
-    * for the zero vector; a zero norm yields NaN qcos, dropped before
-    * the rank window (see the [[pqSearch]] contract). */
+    * `queries` carries (query_id, qe, qnorm). Cell ranking is a
+    * map-side ascending struct sort on (−csim, cluster) against the
+    * one-row cell array; `bulk` picks the query side's plan:
+    *  - false (interactive lookups, micro-batches): the tiny
+    *    (query_id, cluster, qdotcc) probe rows and the per-query tarr
+    *    rows broadcast as two hash joins — each query's m·kc table
+    *    ships once, not nprobe times — so the codes never shuffle.
+    *  - true (kNN-graph builds, where EVERY corpus vector is a query
+    *    and cannot sit on the broadcast side): probes and tarr build
+    *    map-side in one pass, then the scoring join co-partitions both
+    *    sides on `cluster` (scored pairs = Σ_cell |queries probing
+    *    cell|·|cell codes|; AQE splits skewed cells).
+    * Both compute the same expressions, so IvfPqSpec pins
+    * bulk ≡ broadcast bit for bit. The per-query rank window is the
+    * only query-keyed exchange, its input pre-capped map-side by
+    * WindowGroupLimit.
+    *
+    * `excludeSelf` (default true) implements the repo-wide
+    * corpus-member-query convention: query_id shares the vec_id space
+    * and a vector never reports itself as its own neighbor. Pass
+    * false when queries are EXTERNAL vectors whose ids merely happen
+    * to collide with corpus ids (e.g. a stream of new arrivals) —
+    * otherwise an unrelated corpus vector would be silently dropped
+    * from that query's candidates.
+    *
+    * A zero-norm query or decoded vector scores NULL and emits no row
+    * (the zero-norm contract above). */
   def ivfPqSearch(index: IvfPqIndex, queries: DataFrame, k: Int,
-      nprobe: Int = 1, excludeSelf: Boolean = true): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
+      nprobe: Int = 1, excludeSelf: Boolean = true,
+      bulk: Boolean = false): DataFrame = {
     require(nprobe >= 1, s"ivfPqSearch: nprobe must be >= 1, got $nprobe")
-    val m = index.m
-    val kc = index.kc
-    // cell ranking MAP-SIDE against the one-row cell array — the exact
-    // [[ivfPqKnnJoin]] probing expression (r22; the former
-    // crossJoin(coarse) + row_number window paid one query-keyed
-    // exchange + window sort per search — per-TRIGGER fixed cost for
-    // every admission/scoring micro-batch, and one more AQE stage job
-    // for every batch search). Same csim arithmetic and
-    // (csim DESC, cluster ASC) order as the window (ascending struct
-    // sort on (−csim, cluster)); IvfPqSpec pins this probing form
-    // bit-identical on a lossy multi-cell index. Zero-norm edge: an
-    // all-NaN csim query probes by cluster order here where the window
-    // ranked NaN first — both then emit zero rows (NaN qcos is dropped
-    // below), the documented ivfPqKnnJoin contract.
-    val cellsArr = broadcast(index.coarse.groupBy().agg(
+    val (m, kc, sub) = (index.m, index.kc, index.dim / index.m)
+    // coalesce(1): a one-partition input already satisfies the
+    // one-row aggregate, so it runs inside the broadcast job instead of
+    // behind its own shuffle stage (one Spark job less per search; the
+    // array_sort makes the row order irrelevant)
+    val cellsArr = broadcast(index.coarse.coalesce(1).groupBy().agg(
       array_sort(collect_list(struct(
         col("cluster"), col("ce"), col("scc")))).as("cells")))
-    val probes = queries.crossJoin(cellsArr)
+    val cbArr = denseCodebookArr(queries.sparkSession, index.codebooks, m, kc, sub)
+    def withTarr(q: DataFrame): DataFrame = q.crossJoin(cbArr)
+      .withColumn("tarr", graft.functions.AdcTable.column(col("qe"), col("cb"), sub))
+    // a NULL (zero-norm) sim becomes NaN, which the ascending struct
+    // sort places after every number — ties then fall to cluster
+    val probed = queries.crossJoin(cellsArr)
       .withColumn("pc", slice(array_sort(transform(col("cells"), c => {
         val qd = dot(col("qe"), c.getField("ce"))
         struct(
-          (-(qd / (col("qnorm") * sqrt(c.getField("scc"))))).as("negsim"),
+          coalesce(-cosine(qd, col("qnorm"), sqrt(c.getField("scc"))),
+            lit(Double.NaN)).as("negsim"),
           c.getField("cluster").as("cluster"), qd.as("qdotcc"))
       })), 1, nprobe))
-      .select(col("query_id"), explode(col("pc")).as("p"))
-      .select(col("query_id"), col("p.cluster").as("cluster"),
-        col("p.qdotcc").as("qdotcc"))
-    // r21: the per-query ADC table broadcasts ONCE per query — the
-    // former probes⋈table pre-join replicated each query's m·kc-double
-    // tarr nprobe times inside the broadcast relation (nprobe× the
-    // bytes on the wire and in every executor). Joining the tiny
-    // (query_id, cluster, qdotcc) probe rows and the tarr table as two
-    // broadcast hash joins yields the identical matched rows.
-    val table = broadcast(adcTable(queries, index.codebooks, index.dim, m, kc))
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("qcos").desc, col("neighbor_id").asc)
-    index.codes.join(broadcast(probes), "cluster")
-      .join(table, "query_id")
+    def probeRows(df: DataFrame, keep: String*): DataFrame =
+      df.select(keep.map(col) :+ explode(col("pc")).as("p"): _*)
+        .select(keep.map(col) ++ Seq(col("p.cluster").as("cluster"),
+          col("p.qdotcc").as("qdotcc")): _*)
+    val scored =
+      if (bulk) index.codes.join(
+        probeRows(withTarr(probed), "query_id", "qnorm", "tarr"), "cluster")
+      else index.codes.join(broadcast(probeRows(probed, "query_id")), "cluster")
+        .join(broadcast(withTarr(queries).select("query_id", "qnorm", "tarr")),
+          "query_id")
+    topK(scored
       .filter(if (excludeSelf) col("vec_id") =!= col("query_id") else lit(true))
       .select(col("query_id"), col("vec_id").as("neighbor_id"),
         col("cluster"),
-        ((col("qdotcc") + adcFold(col("codes"), col("tarr"), m, kc)) /
-          (col("dnorm") * col("qnorm"))).as("qcos"))
-      .filter(!isnan(col("qcos")))
-      .withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= k)
-      .select("query_id", "neighbor_id", "rnk", "qcos", "cluster")
+        cosine(col("qdotcc") +
+          graft.functions.AdcFold.column(col("codes"), col("tarr"), m, kc),
+          col("dnorm"), col("qnorm")).as("qcos")),
+      "qcos", k, "query_id", "neighbor_id", "rnk", "qcos", "cluster")
   }
 
-  /** Bulk kNN-graph construction over the IVFADC index: every row of
-    * `queries` — CORPUS-scale, emphatically NOT broadcast — gets its k
-    * approximate nearest neighbors. This is the missing bulk form of
-    * [[ivfPqSearch]]: the broadcast formulation serves interactive
-    * nQ-small lookups, but building the kNN graph that feeds
-    * clustering / dedup / curation needs every vector as a query, and
-    * a corpus cannot sit on the broadcast side.
+  /** Two-stage refine search (Jégou et al. 2011 §VI "re-ranking with
+    * source coding"; the FAISS `IndexRefineFlat` pattern): the
+    * cell-probed ADC search shortlists `kShort` candidates per query
+    * from the compressed codes, then ONLY those candidates are
+    * re-scored with EXACT cosine from the raw float vectors and the
+    * true top `k` is returned. This is the production answer to PQ's
+    * lossy recall: the quantized index does the heavy candidate
+    * elimination corpus-stationary, and the exact pass touches
+    * nQ·kShort raw vectors. It composes the two recall knobs — nprobe
+    * widens the scored fraction, kShort deepens the exact pass —
+    * without the corpus ever shuffling. `bulk` is the
+    * [[ivfPqSearch]] query-side switch, applied to both stages.
     *
-    * Plan shape (the whole point): cell probing and the per-query
-    * dense ADC lookup table both build MAP-SIDE against two one-row
-    * broadcast arrays (the coarse cells, and the residual codebooks
-    * densified slot-wise — the [[ivfAssign]] fold precedent), so the
-    * query side never shuffles to rank cells; the scoring join then
-    * co-partitions BOTH sides on `cluster` (a shuffled equi-join —
-    * scored pairs = Σ_cell |queries probing cell|·|cell codes|, the
-    * IVF restriction's own cost model; AQE splits skewed cells), and
-    * the per-query rank window is the only query-keyed exchange, its
-    * input pre-capped map-side by WindowGroupLimit.
-    *
-    * Arithmetic is bit-identical to [[ivfPqSearch]] (same qdotcc /
-    * csim / tarr / adcFold expressions, same (csim DESC, cluster ASC)
-    * cell ranking and (qcos DESC, neighbor_id ASC) result ranking), so
-    * IvfPqSpec pins knn-join ≡ broadcast-search on the same index.
-    * Only the degenerate zero-norm query differs: its all-NaN cell
-    * sims sort last here (ascending struct sort) vs first under the
-    * broadcast path's DESC rank — both then produce zero output rows
-    * (NaN qcos is dropped), so the contract is unchanged.
-    *
-    * `queries` carries (query_id, qe, qnorm). Compose with
-    * [[refineExactBulk]] for an exact-re-ranked graph. */
-  def ivfPqKnnJoin(index: IvfPqIndex, queries: DataFrame, k: Int,
-      nprobe: Int = 1, excludeSelf: Boolean = true): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    require(nprobe >= 1, s"ivfPqKnnJoin: nprobe must be >= 1, got $nprobe")
-    val m = index.m
-    val kc = index.kc
-    val sub = index.dim / m
-    // one broadcast row: coarse cells as an array (cluster, ce, scc)
-    val cellsArr = broadcast(index.coarse.groupBy().agg(
-      array_sort(collect_list(struct(
-        col("cluster"), col("ce"), col("scc")))).as("cells")))
-    // one broadcast row: residual codebooks densified to slot order
-    // (the shared [[denseCodebookArr]] — also the adcTable core)
-    val cbArr =
-      denseCodebookArr(queries.sparkSession, index.codebooks, m, kc, sub)
-    // map-side: rank cells per query (csim DESC, cluster ASC — the
-    // ivfPqSearch convention, as an ascending struct sort), keep
-    // nprobe; build the per-query dense tarr once
-    val probed = queries.crossJoin(cellsArr).crossJoin(cbArr)
-      .withColumn("pc", slice(array_sort(transform(col("cells"), c => {
-        val qd = dot(col("qe"), c.getField("ce"))
-        struct(
-          (-(qd / (col("qnorm") * sqrt(c.getField("scc"))))).as("negsim"),
-          c.getField("cluster").as("cluster"), qd.as("qdotcc"))
-      })), 1, nprobe))
-      // native kernel: one tight nested loop per query builds the
-      // whole m·kc-slot table (the transform+slice+dot HOF it
-      // replaces is 41M interpreted frames at 20k queries — see
-      // graft.functions.AdcTable; bit-identical per slot)
-      .withColumn("tarr",
-        graft.functions.AdcTable.column(col("qe"), col("cb"), sub))
-      .select(col("query_id"), col("qnorm"), col("tarr"),
-        explode(col("pc")).as("p"))
-      .select(col("query_id"), col("qnorm"), col("tarr"),
-        col("p.cluster").as("cluster"), col("p.qdotcc").as("qdotcc"))
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("qcos").desc, col("neighbor_id").asc)
-    index.codes.join(probed, "cluster")
-      .filter(if (excludeSelf) col("vec_id") =!= col("query_id") else lit(true))
-      .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        col("cluster"),
-        ((col("qdotcc") + adcFold(col("codes"), col("tarr"), m, kc)) /
-          (col("dnorm") * col("qnorm"))).as("qcos"))
-      .filter(!isnan(col("qcos")))
-      .withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= k)
-      .select("query_id", "neighbor_id", "rnk", "qcos", "cluster")
+    * `raw` carries (vec_id, e); norms are derived here with the same
+    * sequential arithmetic as the brute-force baseline, so the
+    * re-ranked qcos is bit-identical to what exact search would emit
+    * for the same pair (PqSpec pins the kShort ≥ corpus endpoint ≡
+    * brute force). Output: (query_id, neighbor_id, rnk, qcos). */
+  def ivfPqSearchRefine(index: IvfPqIndex, queries: DataFrame,
+      raw: DataFrame, k: Int, kShort: Int, nprobe: Int = 1,
+      excludeSelf: Boolean = true, bulk: Boolean = false): DataFrame = {
+    require(kShort >= k,
+      s"ivfPqSearchRefine: kShort=$kShort must be >= k=$k")
+    refineExact(
+      ivfPqSearch(index, queries, kShort, nprobe, excludeSelf, bulk),
+      queries, raw, k, bulk)
   }
 
-  /** Bulk exact re-rank — [[refineExact]] for a corpus-scale
-    * shortlist (e.g. [[ivfPqKnnJoin]] output, n·kShort rows): the
-    * shortlist hash-joins the raw vectors on vec_id instead of
-    * broadcasting, queries likewise; the rank window input is still
-    * only the shortlist rows. Same exact arithmetic and ranking as
-    * [[refineExact]]. */
-  def refineExactBulk(shortlist: DataFrame, queries: DataFrame,
-      raw: DataFrame, k: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("qcos").desc, col("neighbor_id").asc)
-    raw.select(col("vec_id").as("neighbor_id"), col("e"))
-      .join(shortlist.select(col("query_id"), col("neighbor_id")),
+  /** Exact-cosine re-rank of a (query_id, neighbor_id) shortlist
+    * against the raw vectors: qcos = dot(e, qe) / (sqrt(dot(e,e)) ·
+    * qnorm), sequential dots, (qcos DESC, neighbor_id ASC) ties. Plan
+    * shape: with `bulk` false the nQ·kShort shortlist broadcasts into
+    * a hash semi-join against the raw scan (the corpus' only
+    * appearance; 2-column pruned read, never hash-shuffled on vec_id)
+    * and the queries broadcast for (qe, qnorm); with `bulk` true
+    * (corpus-scale shortlists) both hash-join instead. The final rank
+    * window sees only the shortlist rows either way. */
+  private def refineExact(shortlist: DataFrame, queries: DataFrame,
+      raw: DataFrame, k: Int, bulk: Boolean): DataFrame = {
+    def side(df: DataFrame): DataFrame = if (bulk) df else broadcast(df)
+    topK(raw.select(col("vec_id").as("neighbor_id"), col("e"))
+      .join(side(shortlist.select(col("query_id"), col("neighbor_id"))),
         "neighbor_id")
-      .join(queries.select(col("query_id"), col("qe"), col("qnorm")),
+      .join(side(queries.select(col("query_id"), col("qe"), col("qnorm"))),
         "query_id")
       .select(col("query_id"), col("neighbor_id"),
-        (dot(col("e"), col("qe")) /
-          (sqrt(dot(col("e"), col("e"))) * col("qnorm"))).as("qcos"))
-      .filter(!isnan(col("qcos")))
-      .withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= k)
-      .select("query_id", "neighbor_id", "rnk", "qcos")
+        cosine(dot(col("e"), col("qe")), sqrt(dot(col("e"), col("e"))),
+          col("qnorm")).as("qcos")),
+      "qcos", k, "query_id", "neighbor_id", "rnk", "qcos")
   }
 
-  /** Persist / reload an [[IvfPqIndex]] (parquet artifact, stamped
-    * meta — the [[loadPqIndex]] fail-fast convention). */
+  /** Persist / reload an [[IvfPqIndex]] (parquet artifact). Load
+    * validates the stamped meta row and re-derives m/dim/kc/kCoarse
+    * from it — a caller can not accidentally search a reloaded index
+    * with the wrong slicing. */
   def saveIvfPqIndex(index: IvfPqIndex, dir: String): Unit = {
     index.coarse.write.mode("overwrite").parquet(s"$dir/coarse")
     index.codebooks.write.mode("overwrite").parquet(s"$dir/codebooks")
@@ -1065,10 +781,30 @@ object Similarity {
     val (m, kc) = (row(0).getInt(0), row(0).getInt(2))
     val codebooks = spark.read.parquet(s"$dir/codebooks")
     val codes = spark.read.parquet(s"$dir/codes")
-    checkPqArtifacts("loadIvfPqIndex", dir, m, kc, codebooks, codes,
-      needsCluster = true)
+    checkPqArtifacts("loadIvfPqIndex", dir, m, kc, codebooks, codes)
     IvfPqIndex(m, row(0).getInt(1), kc, row(0).getInt(3),
       spark.read.parquet(s"$dir/coarse"), codebooks, codes, meta)
+  }
+
+  /** Cheap cross-table consistency check at artifact load (ADVICE r15:
+    * the stamped meta alone cannot catch a dir whose codes/codebooks
+    * were written under different parameters — e.g. a partially
+    * overwritten artifact — which would otherwise search with wrong
+    * slicing and return silent garbage). Cost: one full agg over the
+    * SMALL codebook table (≤ m·kc rows) + a LIMIT-1 probe of codes —
+    * never a corpus scan. */
+  private def checkPqArtifacts(who: String, dir: String, m: Int, kc: Int,
+      codebooks: DataFrame, codes: DataFrame): Unit = {
+    val cb = codebooks.agg(max(col("code")).as("maxc"),
+      countDistinct(col("s")).as("ns")).collect()(0)
+    require(cb.isNullAt(0) || (cb.getInt(0) < kc && cb.getLong(1) <= m),
+      s"$who: $dir codebooks inconsistent with stamped meta " +
+        s"(max code ${cb.get(0)} vs kc=$kc, ${cb.get(1)} subspaces vs m=$m)")
+    require(codes.columns.contains("cluster"),
+      s"$who: $dir codes table lacks the IVFADC cluster column")
+    val sample = codes.select(size(col("codes")).as("sz")).limit(1).collect()
+    require(sample.isEmpty || sample(0).getInt(0) == m,
+      s"$who: $dir codes are ${sample(0).getInt(0)}-wide, stamped m=$m")
   }
 
   /** [[loadIvfPqIndex]] + fold-in of streaming append deltas: reads
@@ -1089,16 +825,9 @@ object Similarity {
       case Some(read) =>
         val deltas = read.select(base.codes.columns.map(col): _*)
         checkPqArtifacts("loadIvfPqIndexWithDeltas", deltaDir, base.m,
-          base.kc, base.codebooks, deltas, needsCluster = true)
-        val metaBase =
-          if (base.meta.columns.contains("n_appended")) base.meta
-          else base.meta.withColumn("n_appended", lit(0L))
-        val meta = metaBase
-          .crossJoin(deltas.agg(count(lit(1)).as("_batch")))
-          .withColumn("n_appended", col("n_appended") + col("_batch"))
-          .drop("_batch")
-        IvfPqIndex(base.m, base.dim, base.kc, base.kCoarse, base.coarse,
-          base.codebooks, base.codes.unionByName(deltas), meta)
+          base.kc, base.codebooks, deltas)
+        base.copy(codes = base.codes.unionByName(deltas),
+          meta = bumpAppended(base.meta, deltas, count(lit(1))))
     }
   }
 
@@ -1161,7 +890,7 @@ object Similarity {
     * capped by the k-means k knob. The smallest id of a cluster is
     * never a victim, so no cluster ever empties out of the result.
     * `v` carries (vec_id, e: array<double>, norm) + the named cluster
-    * column. */
+    * column. A zero-norm vector is nobody's duplicate. */
   def semDedupWithin(v: DataFrame, cluster: String, tau: Double): DataFrame = {
     val a = v.select(col(cluster), col("vec_id").as("vec_a"),
       col("e").as("ea"), col("norm").as("na"))
@@ -1169,7 +898,7 @@ object Similarity {
       col("e").as("eb"), col("norm").as("nb"))
     val victims = a.join(b, Seq(cluster))
       .filter(col("vec_a") < col("vec_b"))
-      .withColumn("cos", dot(col("ea"), col("eb")) / (col("na") * col("nb")))
+      .withColumn("cos", cosine(dot(col("ea"), col("eb")), col("na"), col("nb")))
       .filter(col("cos") >= tau)
       .select(col("vec_b").as("victim")).distinct()
     v.join(victims, col("vec_id") === col("victim"), "left_anti")
@@ -1233,22 +962,15 @@ object Similarity {
     * ones for the fully symmetric mode (which Sq8Spec pins equal to
     * the emb_ann_sq query). Plan shape matches the exact probe:
     * corpus side never shuffles, top-k rides WindowGroupLimit. */
-  def sq8Search(index: DataFrame, queries: DataFrame, k: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("qcos").desc, col("neighbor_id").asc)
-    index.select(col("vec_id").as("neighbor_id"),
+  def sq8Search(index: DataFrame, queries: DataFrame, k: Int): DataFrame =
+    topK(index.select(col("vec_id").as("neighbor_id"),
       graft.functions.Sq8.decodeColumn(col("codes"), col("mn"), col("scale"))
         .as("dq"),
       col("dnorm"))
       .crossJoin(broadcast(queries))
       .filter(col("neighbor_id") =!= col("query_id"))
-      .withColumn("qcos", dot(col("dq"), col("qe")) / (col("dnorm") * col("qnorm")))
-      .filter(!isnan(col("qcos")))
-      .withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= k)
-      .select("query_id", "neighbor_id", "rnk", "qcos")
-  }
+      .withColumn("qcos", cosine(dot(col("dq"), col("qe")), col("dnorm"), col("qnorm"))),
+      "qcos", k, "query_id", "neighbor_id", "rnk", "qcos")
 
   /** Near-dup pairs with cosine ≥ tau from a vector table carrying
     * (vec_id, e: array<double>, norm) plus any `carry` columns, which
@@ -1276,7 +998,7 @@ object Similarity {
         col("norm").as(s"n$suffix")) ++
         carry.map(c => col(c).as(s"${c}_$suffix"))): _*)
     cand.join(side("a"), "vec_a").join(side("b"), "vec_b")
-      .withColumn("cos", dot(col("ea"), col("eb")) / (col("na") * col("nb")))
+      .withColumn("cos", cosine(dot(col("ea"), col("eb")), col("na"), col("nb")))
       .filter(col("cos") >= tau)
       .select((Seq(col("vec_a"), col("vec_b"), col("cos")) ++
         carry.flatMap(c => Seq(col(s"${c}_a"), col(s"${c}_b")))): _*)

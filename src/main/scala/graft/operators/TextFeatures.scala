@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
   * [[graft.multimodal.Multimodal.gridFeatureVec]] made for images,
   * for the text modality): a deterministic, engine-replayable feature
   * vector derived from the raw text, surfaced as `e: array<double>`
-  * so the ENTIRE semantic tier ([[Similarity.ivfPqKnnJoin]],
+  * so the ENTIRE semantic tier ([[Similarity.ivfPqSearch]] bulk kNN graphs,
   * [[GraphDedup.knnGraphDedup]], [[GraphDedup.diversityPrototypes]],
   * SemDeDup) runs on real documents end to end instead of entering at
   * the synthetic `embeddings` table.

@@ -806,10 +806,10 @@ object Docs {
     * ([[graft.operators.TextFeatures.unigramBucketVec]]) over the
     * first 300 docs, exact brute-force cosine top-3 (the broadcast
     * nested loop endpoint — the scale path is
-    * [[graft.operators.Similarity.ivfPqKnnJoin]] +
-    * [[graft.operators.Similarity.refineExactBulk]], probe-measured at
-    * 100k docs by `textdedup:*`). Memoized per session: doc_knn_dedup
-    * and doc_diversity both consume one build, n·k id+double rows. */
+    * [[graft.operators.Similarity.ivfPqSearchRefine]] with
+    * `bulk = true`, probe-measured at 100k docs by `textdedup:*`).
+    * Memoized per session: doc_knn_dedup and doc_diversity both
+    * consume one build, n·k id+double rows. */
   private def textKnnGraph(s: SparkSession, d: String): DataFrame =
     QueryMemo.cached(s, s"text_knn_graph:cap=300:k=3:$d") {
       val dot = graft.functions.DotProduct.column _

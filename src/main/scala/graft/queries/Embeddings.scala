@@ -359,7 +359,8 @@ object Embeddings {
       k = 8, iters = 3)
 
   /** #41f Product-quantization ANN (the real
-    * [[graft.operators.Similarity.pqFit]]/`pqSearch` path) verified at
+    * [[graft.operators.Similarity.pqFit]] one-cell index searched by
+    * [[graft.operators.Similarity.ivfPqSearch]]) verified at
     * its provably-exact endpoint: corpus capped at vec_id < 500 with
     * kc = 500 seed codes and iters = 1, so every subspace codebook
     * contains every subvector, assignment reconstructs each vector
@@ -384,7 +385,8 @@ object Embeddings {
     val q = broadcast(v.filter(col("vec_id") < 5)
       .select(col("vec_id").as("query_id"), col("e").as("qe"),
         col("norm").as("qnorm")))
-    graft.operators.Similarity.pqSearch(idx, q, 5)
+    graft.operators.Similarity.ivfPqSearch(idx, q, 5)
+      .select("query_id", "neighbor_id", "rnk", "qcos")
   }
 
   /** #41j Two-stage refine search (Jégou et al. 2011 §VI / the FAISS
@@ -412,7 +414,7 @@ object Embeddings {
     val q = broadcast(v.filter(col("vec_id") < 5)
       .select(col("vec_id").as("query_id"), col("e").as("qe"),
         col("norm").as("qnorm")))
-    graft.operators.Similarity.pqSearchRefine(
+    graft.operators.Similarity.ivfPqSearchRefine(
       idx, q, v.select(col("vec_id"), col("e")), k = 5, kShort = 20)
   }
 
@@ -452,8 +454,8 @@ object Embeddings {
   }
 
   /** #41k Bulk kNN-graph construction
-    * ([[graft.operators.Similarity.ivfPqKnnJoin]] — EVERY corpus
-    * vector is a query, none of them broadcast: the cell probe and
+    * ([[graft.operators.Similarity.ivfPqSearch]] with `bulk = true` —
+    * EVERY corpus vector is a query, none of them broadcast: the cell probe and
     * dense ADC table build map-side, the scoring join co-partitions
     * on cluster) at the [[embAnnIvfPq]] exact endpoint: one
     * seqfold-mean cell, kc = 300 ≥ corpus, so the graph is the exact
@@ -501,7 +503,8 @@ object Embeddings {
       dim = 64, m = 8, kc = cap, kCoarse = 1, iters = 1)
     val q = v.select(col("vec_id").as("query_id"), col("e").as("qe"),
       col("norm").as("qnorm"))
-    graft.operators.Similarity.ivfPqKnnJoin(idx, q, k = k, nprobe = 1)
+    graft.operators.Similarity.ivfPqSearch(idx, q, k = k, nprobe = 1,
+      bulk = true)
   }
 
   /** #42d Graph-based semantic dedup
@@ -667,8 +670,9 @@ object Embeddings {
   /** ADC at the exact endpoint: Σ_s dot(q_s, c_s) with each 8-dim
     * partial a sequential list_dot_product over a list_slice, partials
     * summed left-associatively — the exact float association of
-    * [[graft.operators.Similarity.pqSearch]]'s zip_with fold (aggregate
-    * from 0.0 ⇒ 0.0+p0 = p0 bit-exactly). dn replays dnorm (sqrt of the
+    * [[graft.operators.Similarity.ivfPqSearch]]'s AdcFold sum (folded
+    * from 0.0 ⇒ 0.0+p0 = p0 bit-exactly; the one origin cell adds
+    * dot(q, 0) = +0.0, which changes no bit). dn replays dnorm (sqrt of the
     * same partial association); the query side keeps the full
     * sequential norm, as ADC never quantizes queries. */
   private def annPqOracle(dim: Int, m: Int, cap: Int, nQ: Int,

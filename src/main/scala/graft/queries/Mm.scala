@@ -106,8 +106,8 @@ object Mm {
     * multimodal corpus pipeline actually runs): real decode →
     * [[graft.multimodal.Multimodal.gridFeatureVec]] pixel embeddings
     * → exact cosine kNN graph (k = 3, the brute-force endpoint; the
-    * scale path swaps in [[graft.operators.Similarity.ivfPqKnnJoin]]
-    * + [[graft.operators.Similarity.refineExactBulk]] — a 0.99
+    * scale path swaps in [[graft.operators.Similarity.ivfPqSearchRefine]]
+    * with `bulk = true` — a 0.99
     * duplicate gate must see EXACT shortlist scores, since raw ADC
     * drops true dups on quantization error alone: the `mmdedup:*`
     * probe measures planted recall 0.26 unrefined vs 1.00 refined) →
@@ -131,9 +131,8 @@ object Mm {
   /** The mm_dedup / mm_audio_dedup shared exact-endpoint graph:
     * brute-force cosine top-k over decoded media embeddings — one
     * broadcast nested loop bounded by the 300 cap (the scale path is
-    * [[graft.operators.Similarity.ivfPqKnnJoin]] +
-    * [[graft.operators.Similarity.refineExactBulk]], probe-measured
-    * by `mmdedup:*`). */
+    * [[graft.operators.Similarity.ivfPqSearchRefine]] with
+    * `bulk = true`, probe-measured by `mmdedup:*`). */
   private def exactMediaGraph(embedded: DataFrame, k: Int): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val dot = graft.functions.DotProduct.column _

@@ -447,7 +447,7 @@ object Scoring {
     * corpus size. An empty increment returns the counts unchanged. */
   def qcAppend(c: QualityCounts, newDocs: DataFrame): QualityCounts = {
     val labels = graft.CacheScope.persistTracked(qcLabels(newDocs))
-    // watermark gate (1-row artifact-meta reads, the loadPqIndex
+    // watermark gate (1-row artifact-meta reads, the loadIvfPqIndex
     // convention): the fold-continuation is exact ONLY above it
     val bounds = labels.agg(min(col("doc_id")).as("lo"),
       max(col("doc_id")).as("hi")).collect()(0)

@@ -28,7 +28,7 @@ object EmbStream {
     * batch_id=N subtree — replay-safe). `queries` is a streaming
     * DataFrame with (query_id, qe: array<double>, qnorm).
     *
-    * `excludeSelf` follows the [[Similarity.pqSearch]] contract:
+    * `excludeSelf` follows the [[Similarity.ivfPqSearch]] contract:
     * leave true only when the streamed query_ids live in the corpus
     * vec_id space (re-scoring corpus members); set false for EXTERNAL
     * arrivals, whose ids colliding with corpus ids must not silently
@@ -65,7 +65,8 @@ object EmbStream {
     * reference index scores below `tau` (no kept near-duplicate
     * already covers it). Output per vector: (vec_id, admit, nn_id,
     * nn_qcos) — nn columns NULL when the index returns no finite
-    * neighbor, which always admits.
+    * neighbor, which always admits (an all-zero arrival has no cosine,
+    * so it gets no neighbor row and the query keeps running).
     *
     * Frozen-reference contract (the domain-cap admission discipline):
     * arrivals are judged against the CURATED reference corpus only —
@@ -112,24 +113,22 @@ object EmbStream {
       .withColumn("qnorm", sqrt(
         graft.functions.DotProduct.column(col("qe"), col("qe"))))
     // external arrivals: ids must not self-exclude corpus rows.
-    // r22: back on the BROADCAST search path (ivfPqSearch /
-    // ivfPqSearchRefine). History: r20 ran broadcast and measured 84
-    // docs/s — but the cost was the RELATIONAL per-query ADC-table
-    // build of that era (an nQ·m·kc grid crossJoin + per-query
-    // 4096-struct sort), not the broadcast itself; r21 both made the
-    // table build a native kernel (AdcTable) AND switched admission to
-    // the bulk path (ivfPqKnnJoin + refineExactBulk), attributing the
-    // win to the path. Measured this round with the kernel in place,
-    // the bulk path is the slower one for micro-batches: it carries
-    // each query's m·kc-double tarr on every one of its nprobe probe
-    // rows through a shuffled cluster join (~0.5 GB per 2k-doc
-    // trigger at m=16, kc=256, nprobe=8), where the broadcast path
-    // ships each query's table once and scans the pinned codes
-    // map-side — no corpus-keyed exchange at all. Arithmetic is
-    // bit-identical in both directions (IvfPqSpec pins knn-join ≡
-    // broadcast search and refineExactBulk ≡ refineExact), so the
-    // verdicts cannot drift. The bulk composition remains the right
-    // form for CORPUS-shaped query sets (kNN-graph builds), where a
+    // r22: the BROADCAST query side (bulk = false). History: r20 ran
+    // broadcast and measured 84 docs/s — but the cost was the
+    // RELATIONAL per-query ADC-table build of that era (an nQ·m·kc
+    // grid crossJoin + per-query 4096-struct sort), not the broadcast
+    // itself; r21 both made the table build a native kernel (AdcTable)
+    // AND switched admission to the bulk side, attributing the win to
+    // the path. Measured with the kernel in place, the bulk side is
+    // the slower one for micro-batches: it carries each query's
+    // m·kc-double tarr on every one of its nprobe probe rows through a
+    // shuffled cluster join (~0.5 GB per 2k-doc trigger at m=16,
+    // kc=256, nprobe=8), where the broadcast side ships each query's
+    // table once and scans the pinned codes map-side — no corpus-keyed
+    // exchange at all. Arithmetic is bit-identical on both sides
+    // (IvfPqSpec pins bulk ≡ broadcast for search and refine), so the
+    // verdicts cannot drift. bulk = true remains the right form for
+    // CORPUS-shaped query sets (kNN-graph builds), where a
     // per-query-table broadcast cannot exist.
     val nn = (refineWith match {
       case Some((raw, kShort)) => Similarity.ivfPqSearchRefine(

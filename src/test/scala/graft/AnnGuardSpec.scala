@@ -1,0 +1,48 @@
+package graft
+
+import org.scalatest.funsuite.AnyFunSuite
+
+/** The one ANN index shape: flat PQ is the one-cell IvfPqIndex, so the
+  * coarse-free index type and its duplicate search/refine/append/
+  * persistence paths must not come back under src/main, and every
+  * cosine in Similarity goes through its one zero-norm-safe helper. */
+class AnnGuardSpec extends AnyFunSuite {
+
+  import java.nio.file.{Files, Path, Paths}
+  import scala.jdk.CollectionConverters._
+
+  /** Code only: scaladocs and comments may name the history. */
+  private def code(src: String): String =
+    src.replaceAll("(?s)/\\*.*?\\*/", "").replaceAll("//[^\n]*", "")
+
+  private def mainSources(): Seq[(Path, String)] = {
+    val root = Paths.get("src/main")
+    assert(Files.isDirectory(root),
+      s"expected to run from the repository root, cwd=${sys.props("user.dir")}")
+    val walk = Files.walk(root)
+    try walk.iterator().asScala.filter(_.toString.endsWith(".scala"))
+      .map(p => p -> code(Files.readString(p))).toList
+    finally walk.close()
+  }
+
+  test("no second PQ index type or duplicate ANN path under src/main") {
+    val gone = Seq("PqIndex", "pqSearch", "pqSearchRefine", "pqAppend",
+      "savePqIndex", "loadPqIndex", "ivfPqKnnJoin", "refineExactBulk")
+    val hits = for {
+      (p, src) <- mainSources()
+      name <- gone if s"\\b$name\\b".r.findFirstIn(src).isDefined
+    } yield s"$p uses $name"
+    assert(hits.isEmpty, hits.mkString("; "))
+  }
+
+  test("Similarity divides a cosine only inside its one helper") {
+    val (_, src) = mainSources()
+      .find(_._1.endsWith("graft/operators/Similarity.scala")).get
+    assert("private def cosine\\(".r.findAllIn(src).size == 1)
+    // a division by a parenthesised product, a column or a square root
+    // is a hand-written cosine; the helper divides by its named guard
+    val divisions = "/\\s*(\\(|col\\(|sqrt\\()".r.findAllMatchIn(src)
+      .map(m => src.substring(0, m.start).count(_ == '\n') + 1).toList
+    assert(divisions.isEmpty, s"cosine divisions at code lines $divisions")
+  }
+}

@@ -104,9 +104,9 @@ class GraphDedupSpec extends AnyFunSuite {
       // exact-endpoint bulk graph: kc >= corpus, one coarse cell
       val idx = Similarity.ivfPqFit(v.select("vec_id", "e"),
         dim = 64, m = 8, kc = 500, kCoarse = 1, iters = 1)
-      val bulk = Similarity.ivfPqKnnJoin(idx,
+      val bulk = Similarity.ivfPqSearch(idx,
         v.select(col("vec_id").as("query_id"), col("e").as("qe"),
-          col("norm").as("qnorm")), k = k, nprobe = 1)
+          col("norm").as("qnorm")), k = k, nprobe = 1, bulk = true)
       val nodes = v.select(col("vec_id").as("id"))
       val tau = 0.35
       def verdicts(g: DataFrame): Map[Long, (Long, Long, Boolean)] =

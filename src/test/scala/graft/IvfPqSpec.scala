@@ -231,9 +231,9 @@ class IvfPqSpec extends AnyFunSuite {
     } finally CacheScope.releaseAll()
   }
 
-  test("ivfPqKnnJoin: the bulk (non-broadcast-query) formulation is " +
-    "bit-identical to ivfPqSearch on the same lossy index, for every " +
-    "corpus vector as a query") {
+  test("bulk = true (non-broadcast query side) is bit-identical to " +
+    "bulk = false on the same lossy index, for every corpus vector as " +
+    "a query") {
     try {
       val v = vecs
       val idx = Similarity.ivfPqFit(v, dim = 64, m = 8, kc = 16,
@@ -246,7 +246,8 @@ class IvfPqSpec extends AnyFunSuite {
           .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2),
             java.lang.Double.doubleToLongBits(r.getDouble(3)),
             r.getInt(4))).toSet
-      val bulk = rows(Similarity.ivfPqKnnJoin(idx, allQ, k = 5, nprobe = 2))
+      val bulk = rows(Similarity.ivfPqSearch(idx, allQ, k = 5, nprobe = 2,
+        bulk = true))
       val bcast = rows(Similarity.ivfPqSearch(idx, broadcast(allQ),
         k = 5, nprobe = 2))
       assert(bulk == bcast,
@@ -256,9 +257,9 @@ class IvfPqSpec extends AnyFunSuite {
     } finally CacheScope.releaseAll()
   }
 
-  test("ivfPqKnnJoin exact endpoint: kc >= corpus + exhaustive nprobe " +
-    "builds the EXACT kNN graph; refineExactBulk re-ranks a bulk " +
-    "shortlist identically to the broadcast refine") {
+  test("bulk search exact endpoint: kc >= corpus + exhaustive nprobe " +
+    "builds the EXACT kNN graph; the bulk refine re-ranks identically " +
+    "to the broadcast refine") {
     try {
       val v = vecs
       val idx = Similarity.ivfPqFit(v, dim = 64, m = 8, kc = 500,
@@ -266,7 +267,8 @@ class IvfPqSpec extends AnyFunSuite {
       val allQ = v.select(col("vec_id").as("query_id"), col("e").as("qe"))
         .withColumn("qnorm",
           sqrt(graft.functions.DotProduct.column(col("qe"), col("qe"))))
-      val graph = Similarity.ivfPqKnnJoin(idx, allQ, k = 5, nprobe = 4)
+      val graph = Similarity.ivfPqSearch(idx, allQ, k = 5, nprobe = 4,
+          bulk = true)
         .select("query_id", "neighbor_id")
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
       assert(graph == exactTopK(v, nQ = 1000000, k = 5))
@@ -274,11 +276,11 @@ class IvfPqSpec extends AnyFunSuite {
       // the same shortlist (both exact-cosine re-ranks, same rows)
       val lossy = Similarity.ivfPqFit(v, dim = 64, m = 8, kc = 8,
         kCoarse = 4, iters = 2)
-      val short = Similarity.ivfPqKnnJoin(lossy, allQ, k = 20, nprobe = 2)
       def rows(df: org.apache.spark.sql.DataFrame): Set[(Long, Long, Int, Long)] =
         df.collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2),
           java.lang.Double.doubleToLongBits(r.getDouble(3)))).toSet
-      val bulkRef = rows(Similarity.refineExactBulk(short, allQ, v, k = 5))
+      val bulkRef = rows(Similarity.ivfPqSearchRefine(lossy, allQ, v,
+        k = 5, kShort = 20, nprobe = 2, bulk = true))
       val bcastRef = rows(Similarity.ivfPqSearchRefine(lossy,
         broadcast(allQ), v, k = 5, kShort = 20, nprobe = 2))
       assert(bulkRef == bcastRef)

@@ -398,6 +398,11 @@ class PlanAuditSpec extends AnyFunSuite {
     try {
       val p = planOf("emb_ann_pq")
       assert(p.contains("BroadcastNestedLoopJoin BuildRight, Cross"), p)
+      // the one-cell index scores through the IVF joins: the per-query
+      // table is the broadcast (build) side of the query_id join, the
+      // codes stream through it
+      assert("BroadcastHashJoin \\[query_id#\\d+L\\], \\[query_id#\\d+L\\], Inner, BuildRight"
+        .r.findFirstIn(p).isDefined, p)
       // late r17: the interpreted zip_with fold became the codegen'd
       // AdcFold kernel (bit-identical; AdcFoldSpec) — pin the kernel
       // and the absence of the HOF it replaced

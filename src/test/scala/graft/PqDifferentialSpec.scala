@@ -9,7 +9,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * iters = 1 the whole pipeline is deterministic (codebooks = the
   * seed subvectors, no mergeable-avg update), so an obvious
   * plain-Scala reference — same seeds, same argmin tie-break, same
-  * fold associations — must reproduce pqSearch's (neighbor set, rank
+  * fold associations — must reproduce the one-cell ivfPqSearch's
+  * (neighbor set, rank
   * order, qcos bits) EXACTLY on random corpora of random shapes
   * (m ∈ {1,2,4,8}, dim = m·sub, kc ≤ or > n, duplicate vectors).
   * This exercises the dense lookup-table slot arithmetic
@@ -22,7 +23,7 @@ class PqDifferentialSpec extends AnyFunSuite {
   import spark.implicits._
 
   /** Plain-Scala PQ at iters=1 + ADC search, mirroring every
-    * arithmetic association of pqFit/pqSearch. */
+    * arithmetic association of pqFit/ivfPqSearch. */
   private def reference(vecs: Seq[(Long, Array[Double])], dim: Int,
       m: Int, kc: Int, queries: Seq[Long], k: Int)
       : Seq[(Long, Long, Int, Long)] = {
@@ -116,7 +117,7 @@ class PqDifferentialSpec extends AnyFunSuite {
           .select(col("vec_id").as("query_id"), col("e").as("qe"))
           .withColumn("qnorm",
             sqrt(graft.functions.DotProduct.column(col("qe"), col("qe")))))
-        val got = Similarity.pqSearch(idx, qdf, k = 5)
+        val got = Similarity.ivfPqSearch(idx, qdf, k = 5)
           .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2),
             java.lang.Double.doubleToRawLongBits(r.getDouble(3)))).toSet
         val want = reference(vecs, dim, m, kc, queries, k = 5).toSet

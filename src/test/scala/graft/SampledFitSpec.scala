@@ -48,7 +48,7 @@ class SampledFitSpec extends AnyFunSuite {
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
   }
 
-  private def codesOf(idx: Similarity.PqIndex): Map[Long, Seq[Int]] =
+  private def codesOf(idx: Similarity.IvfPqIndex): Map[Long, Seq[Int]] =
     idx.codes.select("vec_id", "codes").collect()
       .map(r => r.getLong(0) -> r.getSeq[Int](1)).toMap
 
@@ -108,7 +108,7 @@ class SampledFitSpec extends AnyFunSuite {
       // tie-break and the survivors converge to the exact patterns
       val idx = Similarity.pqFit(v, dim = 8, m = 4, kc = 64, iters = 2,
         trainN = 60)
-      val got = Similarity.pqSearch(idx, queries(v, 6), k = 5)
+      val got = Similarity.ivfPqSearch(idx, queries(v, 6), k = 5)
         .select("query_id", "neighbor_id")
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
       assert(got == exactTopK(v, 6, 5))
@@ -120,8 +120,8 @@ class SampledFitSpec extends AnyFunSuite {
     try {
       val v = vecs
       val exact = exactTopK(v, 10, 10)
-      def recall(idx: Similarity.PqIndex): Double = {
-        val got = Similarity.pqSearch(idx, queries(v, 10), k = 10)
+      def recall(idx: Similarity.IvfPqIndex): Double = {
+        val got = Similarity.ivfPqSearch(idx, queries(v, 10), k = 10)
           .select("query_id", "neighbor_id")
           .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
         got.intersect(exact).size.toDouble / exact.size

@@ -229,25 +229,20 @@ object ScaleProbe {
       .as[graft.streaming.Evt]
   }
 
-  private def batchFlushStreamDf(spark: SparkSession): DataFrame =
-    // the r12 stateful time-OR-size batch flusher, keyed state per type
+  private def batchFlushStreamDf(spark: SparkSession,
+      close: graft.streaming.QueueClose): DataFrame =
+    // the stateful queue replay, keyed state per type; the suite runs it
+    // under both close models so they diff side by side
     graft.streaming.EventStream
-      .batchFlush(syntheticEvts(spark), batchSize = 100, timeLimitSec = 600).toDF()
-
-  private def batchFlushPeriodicStreamDf(spark: SparkSession): DataFrame =
-    // the r13 exact free-running-ticker flusher over the same synthetic
-    // arrivals — suite twin so the two state machines diff side by side
-    graft.streaming.EventStream
-      .batchFlushPeriodic(syntheticEvts(spark), batchSize = 100, tickSec = 600).toDF()
+      .batchFlush(syntheticEvts(spark), batchSize = 100, close).toDF()
 
   private def queueLatencyStreamDf(spark: SparkSession): DataFrame =
-    // the r13 queue-latency observer (gap model): per-event arrival
-    // seconds in bounded state, one LatencyObs per member at close —
-    // heavier per row than the flushers (it EMITS one row per input
-    // row), so its state growth + batch latency need their own probe
-    graft.streaming.EventStream
-      .queueLatency(syntheticEvts(spark), batchSize = 100,
-        timeLimitSec = 600).toDF()
+    // queue-latency observations: the gap-model replay, then one
+    // LatencyObs per member — it EMITS one row per input row, so its
+    // batch latency needs its own probe
+    graft.streaming.EventStream.queueLatency(graft.streaming.EventStream
+      .batchFlush(syntheticEvts(spark), batchSize = 100,
+        graft.streaming.GapClose(600))).toDF()
 
   /** The committed streaming-regression record (VERDICT r11 #7, v2 per
     * r12 #7): run the suite pipelines to a row target each and write
@@ -262,8 +257,10 @@ object ScaleProbe {
       // stateless route fanout — scale their targets so the suite stays
       // minutes, not hours, while every probe still spans many batches
       ("events_route", () => routeStreamDf(spark), target),
-      ("events_batch_flush", () => batchFlushStreamDf(spark), target / 5),
-      ("events_batch_periodic", () => batchFlushPeriodicStreamDf(spark), target / 5),
+      ("events_batch_flush",
+        () => batchFlushStreamDf(spark, graft.streaming.GapClose(600)), target / 5),
+      ("events_batch_periodic",
+        () => batchFlushStreamDf(spark, graft.streaming.TickClose(600)), target / 5),
       ("events_queue_latency", () => queueLatencyStreamDf(spark), target / 5),
       ("docs_neardup", () => docStreamDf(spark), target / 10),
       ("docs_domain_cap", () => domainCapStreamDf(spark), target))

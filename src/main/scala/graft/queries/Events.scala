@@ -191,7 +191,8 @@ object Events {
     * exactly batch_size closed by size (processItems flushes
     * immediately, before any ticker), anything smaller was flushed by
     * time (the day tail behaves as a final ticker flush). Streaming
-    * twin: [[graft.streaming.EventStream.batchFlush]] (parity spec). */
+    * twin: the one queue replay [[graft.streaming.EventStream.batchFlush]]
+    * under [[graft.streaming.GapClose]] (BatchFlushParitySpec). */
   def evtBatchTime(s: SparkSession, d: String): DataFrame =
     graft.operators.Batching.assignTimeOrSize(
         Tables.events(s, d).withColumn("day", date_trunc("day", col("ts"))),
@@ -227,7 +228,8 @@ object Events {
     * PlanAuditSpec's cascade pin); the bucket counts are conditional
     * sums (map-side partial), never a rank or explode of the fact
     * table. Streaming twin: [[graft.streaming.EventStream.queueLatency]]
-    * (QueueLatencyParitySpec). */
+    * over the one queue replay [[graft.streaming.EventStream.batchFlush]]
+    * under [[graft.streaming.GapClose]] (QueueLatencyParitySpec). */
   def evtQueueLatency(s: SparkSession, d: String): DataFrame = {
     val wb = Window.partitionBy(col("event_type"), col("day"), col("batch_id"))
     val lat = graft.operators.Batching.assignTimeOrSize(
@@ -263,8 +265,9 @@ object Events {
     * wait). Same ladder/melt as [[evtQueueLatency]]; the per-batch
     * count and max windows refine assignPeriodic's keys, so the whole
     * cascade still rides ONE hash exchange. Streaming twin:
-    * [[graft.streaming.EventStream.queueLatencyPeriodic]]
-    * (QueueLatencyParitySpec). */
+    * [[graft.streaming.EventStream.queueLatency]] over the one queue
+    * replay [[graft.streaming.EventStream.batchFlush]] under
+    * [[graft.streaming.TickClose]] (QueueLatencyParitySpec). */
   def evtQueueLatencyPeriodic(s: SparkSession, d: String): DataFrame = {
     val wb = Window.partitionBy(col("event_type"), col("day"), col("batch_id"))
     val lat = graft.operators.Batching.assignPeriodic(
@@ -311,8 +314,8 @@ object Events {
     * per sub-limit gap the ticker emits short batches every tick, and
     * so does this query. Rollup per batch with the close reason and
     * close second (size → last arrival, tick → window end). Streaming
-    * twin: [[graft.streaming.EventStream.batchFlushPeriodic]]
-    * (BatchFlushParitySpec). */
+    * twin: the one queue replay [[graft.streaming.EventStream.batchFlush]]
+    * under [[graft.streaming.TickClose]] (BatchFlushParitySpec). */
   def evtBatchPeriodic(s: SparkSession, d: String): DataFrame =
     graft.operators.Batching.assignPeriodic(
         Tables.events(s, d).withColumn("day", date_trunc("day", col("ts"))),

@@ -16,37 +16,34 @@ case class SessionState(start_s: Long, last_s: Long, n_events: Int)
 case class ClosedSession(user_id: Long, start_s: Long, end_s: Long,
     n_events: Int)
 
-/** Open time-OR-size batch carried between micro-batches
-  * (epoch seconds; batches_closed numbers the next close 1-based). */
-case class BatchState(n: Int, first_id: Long, last_id: Long,
-    first_s: Long, last_s: Long, batches_closed: Long)
+/** How a queue batch closes when it does not fill up
+  * ([[EventStream.batchFlush]]). */
+sealed trait QueueClose
 
-/** A flushed batch emitted downstream (closed_by: "size" | "time"). */
+/** Gap model: an arrival more than `limitSec` after the pending batch's
+  * last arrival first flushes that batch (closed_by "time"). */
+case class GapClose(limitSec: Long) extends QueueClose
+
+/** Free-running ticker: ticks at t0 + k·tickSec from the stream's first
+  * arrival second; the first arrival in a later tick window flushes the
+  * pending batch at its window-end tick (closed_by "tick"). */
+case class TickClose(tickSec: Long) extends QueueClose
+
+/** Open queue batch carried between micro-batches (epoch seconds): the
+  * tick anchor `t0`, the pending batch's tick window `w`, its arrival
+  * seconds newest first (at most batchSize of them), its first and last
+  * event ids, and `batches_closed`, which numbers the next close
+  * 1-based. */
+case class QueueState(t0: Long, w: Long, secs: List[Long], first_id: Long,
+    last_id: Long, batches_closed: Long)
+
+/** A flushed batch (closed_by: "size" | "time" | "tick"). close_s is the
+  * last arrival second for size and time closes and the window-end tick
+  * for tick closes; arrival_s lists the members' arrival seconds in
+  * arrival order. */
 case class ClosedBatch(stream: String, batch_id: Long, n_events: Int,
-    first_event: Long, last_event: Long, span_sec: Long, closed_by: String)
-
-/** Open periodic-ticker batch ([[EventStream.batchFlushPeriodic]]):
-  * `t0` anchors the stream's tick phase at its first arrival second;
-  * `w` is the window holding the pending batch. Constant-size state. */
-case class PeriodicState(t0: Long, w: Long, n: Int, first_id: Long,
-    last_id: Long, last_s: Long, batches_closed: Long)
-
-/** A ticker-model flushed batch (closed_by: "size" | "tick"; close_s =
-  * last arrival second for size, window-end tick second for tick). */
-case class ClosedPeriodicBatch(stream: String, batch_id: Long,
-    n_events: Int, first_event: Long, last_event: Long, closed_by: String,
-    close_s: Long)
-
-/** Open batch state for the latency twin: the pending events' arrival
-  * seconds, newest first (bounded by batchSize, so state stays a few
-  * dozen bytes per stream). */
-case class LatencyState(secs: List[Long], batches_closed: Long)
-
-/** Latency-twin state for the periodic-ticker model: the tick anchor,
-  * the pending batch's window, and its arrival seconds (newest first,
-  * bounded by batchSize). */
-case class PeriodicLatencyState(t0: Long, w: Long, secs: List[Long],
-    batches_closed: Long)
+    first_event: Long, last_event: Long, span_sec: Long, closed_by: String,
+    close_s: Long, arrival_s: Seq[Long])
 
 /** One per-event queue-latency observation, emitted when its batch
   * closes (latency_s = batch close second − arrival second). */
@@ -61,9 +58,13 @@ case class LatencyObs(stream: String, batch_id: Long, latency_s: Long)
   * The reference's queue/worker machinery (internal/queue/queue.go) is
   * backpressure infrastructure; in Structured Streaming the micro-batch
   * IS the batch, and maxRecordsPerFile reproduces the ≤500-records
-  * PutRecords split (internal/kinesis/kinesis.go:30). State that the
-  * reference keeps in goroutines (open sessions) lives in
-  * flatMapGroupsWithState, checkpointed and partitioned by user_id.
+  * PutRecords split (internal/kinesis/kinesis.go:30). The queue's own
+  * flush semantics (batch by size, or by time under a [[QueueClose]]
+  * model: [[GapClose]] or [[TickClose]]) are replayed by ONE stateful
+  * op, [[batchFlush]]; its latency histogram is the stateless
+  * [[queueLatency]] over the closed batches. State that the reference
+  * keeps in goroutines (open sessions, open batches) lives in
+  * flatMapGroupsWithState, checkpointed and partitioned by key.
   */
 object EventStream {
 
@@ -192,188 +193,85 @@ object EventStream {
       .select(col("stream"),
         (unix_timestamp(col("window.start")) + 7200L).as("cutoff_hour_epoch"))
 
-  /** #9b-streaming Time-OR-size batch flush — the live twin of the
-    * batch `evt_batch_time` (queue.go:144-216): per stream, a batch is
-    * emitted the MOMENT it fills (`size`), and a later event arriving
-    * more than `timeLimitSec` after the last one first flushes the
-    * pending partial batch (`time`) — the gap-closure trick
-    * [[sessionize]] uses, deterministic without wall-clock timeouts.
-    * NOTE on fidelity (ADVICE r12): the reference's ticker is
-    * free-running and periodic — reset only after it fires, never on
-    * arrivals or size flushes — so under a steady sub-limit trickle
-    * (e.g. one event every 500 s against a 600 s limit) it also
-    * flushes partial batches the gap model would keep accumulating.
-    * The gap replay is a deterministic APPROXIMATION, exact when
-    * arrivals are dense (size flushes dominate) or fully idle (every
-    * gap beyond the limit flushes), which is the regime the corpus and
-    * the parity spec exercise. API REQUIREMENT: events must arrive in
-    * event_id (arrival) order ACROSS micro-batches — within one
-    * micro-batch this operator sorts, but a lower-event_id straggler
-    * in a LATER micro-batch is appended out of order, diverging from
-    * the batch operator (and span_sec, last_s − first_s, can go
-    * negative on out-of-order timestamps). Feed it an ordered source
-    * (Kafka per-partition order, or the replay harness) —
-    * BatchFlushParitySpec pins stream output == batch assignment minus
-    * each stream's open tail under that contract. */
+  /** #9b/#9d-streaming The reference's one queue (queue.go:144-216) as
+    * one stateful replay, the live twin of the batch `evt_batch_time`
+    * ([[graft.operators.Batching.assignTimeOrSize]]) and
+    * `evt_batch_periodic` ([[graft.operators.Batching.assignPeriodic]]).
+    * Per stream, a batch is emitted the moment it fills (`size`), and
+    * `close` decides when a partial batch flushes:
+    *  - [[GapClose]]: a later arrival more than `limitSec` after the
+    *    last one first flushes the pending batch (`time`) — the
+    *    gap-closure trick [[sessionize]] uses. It APPROXIMATES the
+    *    reference's free-running ticker (ADVICE r12): under a steady
+    *    sub-limit trickle the ticker also flushes partial batches the
+    *    gap model keeps accumulating; the two agree when arrivals are
+    *    dense or fully idle.
+    *  - [[TickClose]]: the EXACT ticker — ticks run free at the
+    *    stream's first-arrival phase, and the first arrival in a later
+    *    tick window flushes the pending batch at its window-end tick
+    *    (`tick`; later ticks were empty no-ops).
+    * Deterministic without wall-clock timeouts. API REQUIREMENT: events
+    * must arrive in event_id (arrival) order ACROSS micro-batches —
+    * within one micro-batch this operator sorts, but a lower-event_id
+    * straggler in a LATER micro-batch is appended out of order,
+    * diverging from the batch operators. State holds at most batchSize
+    * arrival seconds per stream. BatchFlushParitySpec pins stream
+    * output == batch assignment minus each stream's open tail. */
   def batchFlush(events: Dataset[Evt], batchSize: Int,
-      timeLimitSec: Long): Dataset[ClosedBatch] = {
+      close: QueueClose): Dataset[ClosedBatch] = {
     import events.sparkSession.implicits._
     events
       .groupByKey(_.event_type)
-      .flatMapGroupsWithState[BatchState, ClosedBatch](
+      .flatMapGroupsWithState[QueueState, ClosedBatch](
         OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (stream: String, batch: Iterator[Evt], state: GroupState[BatchState]) =>
+        (stream: String, batch: Iterator[Evt], state: GroupState[QueueState]) =>
           val out = List.newBuilder[ClosedBatch]
           var st = state.getOption
-          def close(s: BatchState, reason: String): BatchState = {
-            out += ClosedBatch(stream, s.batches_closed + 1, s.n,
-              s.first_id, s.last_id, s.last_s - s.first_s, reason)
-            BatchState(0, 0L, 0L, 0L, 0L, s.batches_closed + 1)
-          }
-          batch.toSeq.sortBy(_.event_id).foreach { e =>
-            val sec = e.ts.getTime / 1000
-            st = st match {
-              case Some(s) if s.n > 0 && sec - s.last_s > timeLimitSec =>
-                // idle gap: the ticker would have flushed the pending
-                // partial batch before this arrival
-                Some(close(s, "time").copy(n = 1, first_id = e.event_id,
-                  last_id = e.event_id, first_s = sec, last_s = sec))
-              case Some(s) if s.n > 0 =>
-                Some(s.copy(n = s.n + 1, last_id = e.event_id, last_s = sec))
-              case other =>
-                Some(BatchState(1, e.event_id, e.event_id, sec, sec,
-                  other.map(_.batches_closed).getOrElse(0L)))
-            }
-            st = st.map(s => if (s.n >= batchSize) close(s, "size") else s)
-          }
-          st.foreach(state.update)
-          out.result().iterator
-      }
-  }
-
-  /** #9d-streaming EXACT periodic-ticker flush — the live twin of the
-    * batch `evt_batch_periodic`
-    * ([[graft.operators.Batching.assignPeriodic]], queue.go:155-173):
-    * ticks run free at the stream's first-arrival phase (t0 + k·tick),
-    * so a pending batch closes on size the moment it fills, or as
-    * "tick" when a later event lands in a later tick window (the first
-    * tick after the pending window flushed it; later ticks were empty
-    * no-ops). Unlike [[batchFlush]]'s gap approximation this emits the
-    * short batches a steady sub-limit trickle produces. Same
-    * in-order-across-micro-batches contract as [[batchFlush]]; state is
-    * constant-size per stream. BatchFlushParitySpec pins stream output
-    * == batch assignment minus each stream's open tail. */
-  def batchFlushPeriodic(events: Dataset[Evt], batchSize: Int,
-      tickSec: Long): Dataset[ClosedPeriodicBatch] = {
-    import events.sparkSession.implicits._
-    events
-      .groupByKey(_.event_type)
-      .flatMapGroupsWithState[PeriodicState, ClosedPeriodicBatch](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (stream: String, batch: Iterator[Evt], state: GroupState[PeriodicState]) =>
-          val out = List.newBuilder[ClosedPeriodicBatch]
-          var st = state.getOption
-          def close(s: PeriodicState, reason: String): PeriodicState = {
-            val closeS =
-              if (reason == "size") s.last_s else s.t0 + (s.w + 1) * tickSec
-            out += ClosedPeriodicBatch(stream, s.batches_closed + 1, s.n,
-              s.first_id, s.last_id, reason, closeS)
-            s.copy(n = 0, batches_closed = s.batches_closed + 1)
-          }
-          batch.toSeq.sortBy(_.event_id).foreach { e =>
-            val sec = e.ts.getTime / 1000
-            var s = st.getOrElse(PeriodicState(sec, 0L, 0, 0L, 0L, sec, 0L))
-            val w = (sec - s.t0) / tickSec
-            if (s.n > 0 && w > s.w) s = close(s, "tick")
-            s =
-              if (s.n == 0) s.copy(w = w, n = 1, first_id = e.event_id,
-                last_id = e.event_id, last_s = sec)
-              else s.copy(n = s.n + 1, last_id = e.event_id, last_s = sec)
-            if (s.n >= batchSize) s = close(s, "size")
-            st = Some(s)
-          }
-          st.foreach(state.update)
-          out.result().iterator
-      }
-  }
-
-  /** #27c-streaming Queue-latency observations — the live twin of the
-    * batch `evt_queue_latency` (internal/event/metrics.go:29
-    * IncomingQueueLatencyHistogram): the same time-OR-size state
-    * machine as [[batchFlush]], but the state carries each pending
-    * event's arrival second (bounded by batchSize) and a batch close
-    * emits one latency observation per member — close second − arrival
-    * second, the deterministic replay's lower bound of arrival→flush.
-    * Bucketizing downstream (a windowed groupBy over `latency_s`)
-    * reproduces the histogram; emitting raw observations keeps the
-    * operator composable. Same in-order-across-micro-batches contract
-    * and gap-approximation caveat as [[batchFlush]].
-    * QueueLatencyParitySpec pins stream output == the batch query's
-    * per-event latencies minus each stream's open tail. */
-  def queueLatency(events: Dataset[Evt], batchSize: Int,
-      timeLimitSec: Long): Dataset[LatencyObs] = {
-    import events.sparkSession.implicits._
-    events
-      .groupByKey(_.event_type)
-      .flatMapGroupsWithState[LatencyState, LatencyObs](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (stream: String, batch: Iterator[Evt], state: GroupState[LatencyState]) =>
-          val out = List.newBuilder[LatencyObs]
-          var st = state.getOption.getOrElse(LatencyState(Nil, 0L))
-          def close(s: LatencyState): LatencyState = {
-            val closeSec = s.secs.head // newest-first: head = last arrival
-            s.secs.reverseIterator.foreach(a =>
-              out += LatencyObs(stream, s.batches_closed + 1, closeSec - a))
-            LatencyState(Nil, s.batches_closed + 1)
-          }
-          batch.toSeq.sortBy(_.event_id).foreach { e =>
-            val sec = e.ts.getTime / 1000
-            if (st.secs.nonEmpty && sec - st.secs.head > timeLimitSec)
-              st = close(st)
-            st = st.copy(secs = sec :: st.secs)
-            if (st.secs.size >= batchSize) st = close(st)
-          }
-          state.update(st)
-          out.result().iterator
-      }
-  }
-
-  /** #27c'-streaming Queue-latency observations under the EXACT ticker
-    * model — the live twin of `evt_queue_latency_periodic`: the
-    * [[batchFlushPeriodic]] state machine with per-event arrival
-    * seconds in state (bounded by batchSize), emitting close − arrival
-    * per member; a size close flushes at the filling arrival, a tick
-    * close at the pending window's end tick (the true flush instant).
-    * Same in-order contract; QueueLatencyParitySpec pins stream ==
-    * batch minus open tails. */
-  def queueLatencyPeriodic(events: Dataset[Evt], batchSize: Int,
-      tickSec: Long): Dataset[LatencyObs] = {
-    import events.sparkSession.implicits._
-    events
-      .groupByKey(_.event_type)
-      .flatMapGroupsWithState[PeriodicLatencyState, LatencyObs](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (stream: String, batch: Iterator[Evt], state: GroupState[PeriodicLatencyState]) =>
-          val out = List.newBuilder[LatencyObs]
-          var st = state.getOption
-          def close(s: PeriodicLatencyState, closeS: Long): PeriodicLatencyState = {
-            s.secs.reverseIterator.foreach(a =>
-              out += LatencyObs(stream, s.batches_closed + 1, closeS - a))
+          def flush(s: QueueState, reason: String, closeS: Long): QueueState = {
+            out += ClosedBatch(stream, s.batches_closed + 1, s.secs.size,
+              s.first_id, s.last_id, s.secs.head - s.secs.last, reason,
+              closeS, s.secs.reverse)
             s.copy(secs = Nil, batches_closed = s.batches_closed + 1)
           }
           batch.toSeq.sortBy(_.event_id).foreach { e =>
             val sec = e.ts.getTime / 1000
-            var s = st.getOrElse(PeriodicLatencyState(sec, 0L, Nil, 0L))
-            val w = (sec - s.t0) / tickSec
-            if (s.secs.nonEmpty && w > s.w)
-              s = close(s, s.t0 + (s.w + 1) * tickSec)
-            s = s.copy(w = w, secs = sec :: s.secs)
-            if (s.secs.size >= batchSize) s = close(s, sec)
+            var s = st.getOrElse(QueueState(sec, 0L, Nil, 0L, 0L, 0L))
+            val w = close match {
+              case TickClose(tickSec) => (sec - s.t0) / tickSec
+              case GapClose(_) => 0L
+            }
+            if (s.secs.nonEmpty) close match {
+              case GapClose(limitSec) if sec - s.secs.head > limitSec =>
+                s = flush(s, "time", s.secs.head)
+              case TickClose(tickSec) if w > s.w =>
+                s = flush(s, "tick", s.t0 + (s.w + 1) * tickSec)
+              case _ =>
+            }
+            if (s.secs.isEmpty) s = s.copy(w = w, first_id = e.event_id)
+            s = s.copy(secs = sec :: s.secs, last_id = e.event_id)
+            if (s.secs.size >= batchSize) s = flush(s, "size", sec)
             st = Some(s)
           }
           st.foreach(state.update)
           out.result().iterator
       }
+  }
+
+  /** #27c/#27c'-streaming Queue-latency observations — the live twin of
+    * the batch `evt_queue_latency` and `evt_queue_latency_periodic`
+    * (internal/event/metrics.go:29 IncomingQueueLatencyHistogram): one
+    * observation per member of each [[batchFlush]] batch, close second
+    * − arrival second. Under [[GapClose]] the close second is the last
+    * arrival, a lower bound of the wall flush instant; under
+    * [[TickClose]] a tick close is the true window-end flush. A
+    * stateless map over the closed batches: bucketizing downstream (a
+    * groupBy over `latency_s`) reproduces the histogram.
+    * QueueLatencyParitySpec pins stream output == the batch queries'
+    * per-event latencies minus each stream's open tail. */
+  def queueLatency(closed: Dataset[ClosedBatch]): Dataset[LatencyObs] = {
+    import closed.sparkSession.implicits._
+    closed.flatMap(b =>
+      b.arrival_s.map(a => LatencyObs(b.stream, b.batch_id, b.close_s - a)))
   }
 
   /** #27b-streaming Merge-error flag counters — the live form of

@@ -8,22 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * cosine in Similarity goes through its one zero-norm-safe helper. */
 class AnnGuardSpec extends AnyFunSuite {
 
-  import java.nio.file.{Files, Path, Paths}
-  import scala.jdk.CollectionConverters._
-
-  /** Code only: scaladocs and comments may name the history. */
-  private def code(src: String): String =
-    src.replaceAll("(?s)/\\*.*?\\*/", "").replaceAll("//[^\n]*", "")
-
-  private def mainSources(): Seq[(Path, String)] = {
-    val root = Paths.get("src/main")
-    assert(Files.isDirectory(root),
-      s"expected to run from the repository root, cwd=${sys.props("user.dir")}")
-    val walk = Files.walk(root)
-    try walk.iterator().asScala.filter(_.toString.endsWith(".scala"))
-      .map(p => p -> code(Files.readString(p))).toList
-    finally walk.close()
-  }
+  import SourceScan.mainSources
 
   test("no second PQ index type or duplicate ANN path under src/main") {
     val gone = Seq("PqIndex", "pqSearch", "pqSearchRefine", "pqAppend",

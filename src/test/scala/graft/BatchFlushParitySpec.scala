@@ -6,16 +6,22 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** SURVEY §2a #9b: the streaming time-OR-size batch flush
-  * (EventStream.batchFlush) must agree with the batch operator
+/** SURVEY §2a #9b/#9d: the streaming queue replay (EventStream.batchFlush)
+  * under GapClose must agree with the batch operator
   * (Batching.assignTimeOrSize) batch for batch — stream output ==
   * batch rollup minus each stream's open (not-yet-flushed) tail. Run
   * at sf0.01: the corpus density there produces BOTH close reasons
   * (205 size / 2442 time flushes), so the parity covers the size
-  * path, the gap path, and the reset-after-flush interaction. */
+  * path, the gap path, and the reset-after-flush interaction. Under
+  * TickClose it must agree with Batching.assignPeriodic the same way. */
 class BatchFlushParitySpec extends AnyFunSuite {
 
   lazy val spark: SparkSession = SparkTest.spark
+
+  private val gapCols = Seq("stream", "batch_id", "n_events", "first_event",
+    "last_event", "span_sec", "closed_by")
+  private val tickCols = Seq("stream", "batch_id", "n_events", "first_event",
+    "last_event", "closed_by", "close_s")
 
   test("streaming batchFlush == batch assignTimeOrSize minus open tails") {
     import spark.implicits._
@@ -39,9 +45,8 @@ class BatchFlushParitySpec extends AnyFunSuite {
     val expected = batchSide.join(tails, "stream")
       .filter(!(col("batch_id") === col("tail_id") &&
         col("n_events") < batchSize))
-      .select("stream", "batch_id", "n_events", "first_event", "last_event",
-        "span_sec", "closed_by")
-      .as[ClosedBatch].collect().toSet
+      .select(gapCols.map(col): _*)
+      .as[(String, Long, Int, Long, Long, Long, String)].collect().toSet
 
     val evts = Tables.events(spark, d)
       .select(col("user_id"), col("ts"), col("event_type"), col("event_id"),
@@ -49,21 +54,20 @@ class BatchFlushParitySpec extends AnyFunSuite {
       .as[Evt].collect().sortBy(_.event_id).toSeq
 
     val in = MemoryStream[Evt]
-    val q = EventStream.batchFlush(in.toDS(), batchSize, limitSec)
+    val q = EventStream.batchFlush(in.toDS(), batchSize, GapClose(limitSec))
       .writeStream.format("memory").queryName("batch_flush_parity")
       .outputMode("append").start()
     try { in.addData(evts); q.processAllAvailable() } finally q.stop()
 
-    val got = spark.table("batch_flush_parity").as[ClosedBatch]
-      .collect().toSet
+    val got = spark.table("batch_flush_parity").select(gapCols.map(col): _*)
+      .as[(String, Long, Int, Long, Long, Long, String)].collect().toSet
     assert(got.size == expected.size,
       s"stream ${got.size} batches vs batch ${expected.size}")
     assert(got == expected,
       s"only-stream: ${(got -- expected).take(3)}; " +
         s"only-batch: ${(expected -- got).take(3)}")
     // the parity is only meaningful if both flush paths fired
-    assert(got.exists(_.closed_by == "size") &&
-      got.exists(_.closed_by == "time"))
+    assert(got.exists(_._7 == "size") && got.exists(_._7 == "time"))
   }
 
   test("streaming batchFlushPeriodic == batch assignPeriodic minus open tails") {
@@ -97,9 +101,8 @@ class BatchFlushParitySpec extends AnyFunSuite {
     val expected = batchSide.join(tails, "stream")
       .filter(!(col("batch_id") === col("tail_id") &&
         col("n_events") < batchSize))
-      .select("stream", "batch_id", "n_events", "first_event", "last_event",
-        "closed_by", "close_s")
-      .as[ClosedPeriodicBatch].collect().toSet
+      .select(tickCols.map(col): _*)
+      .as[(String, Long, Int, Long, Long, String, Long)].collect().toSet
 
     val evts = Tables.events(spark, d)
       .select(col("user_id"), col("ts"), col("event_type"), col("event_id"),
@@ -107,19 +110,19 @@ class BatchFlushParitySpec extends AnyFunSuite {
       .as[Evt].collect().sortBy(_.event_id).toSeq
 
     val in = MemoryStream[Evt]
-    val q = EventStream.batchFlushPeriodic(in.toDS(), batchSize, tickSec)
+    val q = EventStream.batchFlush(in.toDS(), batchSize, TickClose(tickSec))
       .writeStream.format("memory").queryName("batch_flush_periodic_parity")
       .outputMode("append").start()
     try { in.addData(evts); q.processAllAvailable() } finally q.stop()
 
     val got = spark.table("batch_flush_periodic_parity")
-      .as[ClosedPeriodicBatch].collect().toSet
+      .select(tickCols.map(col): _*)
+      .as[(String, Long, Int, Long, Long, String, Long)].collect().toSet
     assert(got.size == expected.size,
       s"stream ${got.size} batches vs batch ${expected.size}")
     assert(got == expected,
       s"only-stream: ${(got -- expected).take(3)}; " +
         s"only-batch: ${(expected -- got).take(3)}")
-    assert(got.exists(_.closed_by == "size") &&
-      got.exists(_.closed_by == "tick"))
+    assert(got.exists(_._6 == "size") && got.exists(_._6 == "tick"))
   }
 }

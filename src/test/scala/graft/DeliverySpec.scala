@@ -15,26 +15,15 @@ class DeliverySpec extends AnyFunSuite {
 
   test("foreachBatch and batch_id= paths appear under src/main only in " +
     "the delivery module") {
-    import java.nio.file.{Files, Path, Paths}
-    import scala.jdk.CollectionConverters._
-    val root = Paths.get("src/main")
-    assert(Files.isDirectory(root),
-      s"expected to run from the repository root, cwd=${sys.props("user.dir")}")
-    val walk = Files.walk(root)
-    val sources: Seq[(Path, String)] =
-      try walk.iterator().asScala.filter(_.toString.endsWith(".scala"))
-        .map(p => p -> Files.readString(p)).toList
-      finally walk.close()
+    val sources = SourceScan.mainSources()
     assert(sources.exists(_._1.endsWith("graft/streaming/Delivery.scala")))
     // code only (scaladocs may describe the layout they deliver into);
     // Spark's foreachBatch, not calls to Delivery's own primitive
-    def code(src: String): String =
-      src.replaceAll("(?s)/\\*.*?\\*/", "").replaceAll("//[^\n]*", "")
     val tokens = Seq("Spark foreachBatch" -> "(?<!Delivery)\\.foreachBatch\\b".r,
       "a batch_id= path" -> "batch_id=".r)
     val strays = for {
       (p, src) <- sources if !p.endsWith("graft/streaming/Delivery.scala")
-      (what, re) <- tokens if re.findFirstIn(code(src)).isDefined
+      (what, re) <- tokens if re.findFirstIn(src).isDefined
     } yield s"$p uses $what"
     assert(strays.isEmpty, strays.mkString("; "))
   }

@@ -7,8 +7,9 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** SURVEY §2a #27c: the streaming queue-latency twin
-  * (EventStream.queueLatency) must emit, batch for batch, the same
+/** SURVEY §2a #27c/#27c': the streaming queue-latency twin
+  * (EventStream.queueLatency over EventStream.batchFlush's closed
+  * batches) must emit, batch for batch, the same
   * per-event latency observations the batch operator derives
   * (Batching.assignTimeOrSize + close-time window), minus each
   * stream's open (never-closed) tail. Run at sf0.01 so both close
@@ -49,7 +50,8 @@ class QueueLatencyParitySpec extends AnyFunSuite {
       .as[Evt].collect().sortBy(_.event_id).toSeq
 
     val in = MemoryStream[Evt]
-    val q = EventStream.queueLatency(in.toDS(), batchSize, limitSec)
+    val q = EventStream.queueLatency(
+        EventStream.batchFlush(in.toDS(), batchSize, GapClose(limitSec)))
       .writeStream.format("memory").queryName("queue_latency_parity")
       .outputMode("append").start()
     try { in.addData(evts); q.processAllAvailable() } finally q.stop()
@@ -101,7 +103,8 @@ class QueueLatencyParitySpec extends AnyFunSuite {
       .as[Evt].collect().sortBy(_.event_id).toSeq
 
     val in = MemoryStream[Evt]
-    val q = EventStream.queueLatencyPeriodic(in.toDS(), batchSize, tickSec)
+    val q = EventStream.queueLatency(
+        EventStream.batchFlush(in.toDS(), batchSize, TickClose(tickSec)))
       .writeStream.format("memory").queryName("queue_latency_periodic_parity")
       .outputMode("append").start()
     try { in.addData(evts); q.processAllAvailable() } finally q.stop()

@@ -240,19 +240,21 @@ class StreamingRecoverySpec extends AnyFunSuite {
       s"restart must add doc 3 without re-judging doc 1; got $verdicts")
   }
 
+  /** `id|2024-01-01 00:00:00` lines → one-stream events (event_id = id). */
+  private def rkSource(dir: String): org.apache.spark.sql.Dataset[Evt] =
+    spark.readStream.text(dir)
+      .select(split(col("value"), "\\|").as("p"))
+      .select(col("p")(0).cast("long").as("user_id"),
+        to_timestamp(col("p")(1)).as("ts"),
+        lit("rk").as("event_type"),
+        col("p")(0).cast("long").as("event_id"),
+        lit(1.0).as("value"))
+      .as[Evt]
+
   test("#9b-streaming batchFlush resumes its open batch from checkpoint exactly once") {
     val src = tmp("bf_src"); val out = tmp("bf_out"); val ckpt = tmp("bf_ckpt")
-    def evtSource(): org.apache.spark.sql.Dataset[Evt] =
-      spark.readStream.text(src)
-        .select(split(col("value"), "\\|").as("p"))
-        .select(col("p")(0).cast("long").as("user_id"),
-          to_timestamp(col("p")(1)).as("ts"),
-          lit("rk").as("event_type"),
-          col("p")(0).cast("long").as("event_id"),
-          lit(1.0).as("value"))
-        .as[Evt]
     def run(): Unit = {
-      val q = EventStream.batchFlush(evtSource(), batchSize = 5, timeLimitSec = 60)
+      val q = EventStream.batchFlush(rkSource(src), batchSize = 5, GapClose(60))
         .writeStream.format("parquet").option("path", out)
         .option("checkpointLocation", ckpt).outputMode("append").start()
       try q.processAllAvailable() finally q.stop()
@@ -278,4 +280,43 @@ class StreamingRecoverySpec extends AnyFunSuite {
       (3L, 2, 11L, 12L, "time"), (4L, 5, 13L, 17L, "size")),
       s"restart must flush the open tail once and continue numbering; got $got")
   }
+
+  test("#9b-streaming batchFlush fails fast on a checkpoint holding the " +
+    "pre-replay BatchState") {
+    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout,
+      OutputMode, StreamingQueryException}
+    val src = tmp("bs_src"); val ckpt = tmp("bs_ckpt")
+    // a stand-in for the time-OR-size op before the one queue replay:
+    // the same groupByKey(_.event_type) query, its state in the old
+    // BatchState shape
+    val q1 = rkSource(src).groupByKey(_.event_type)
+      .flatMapGroupsWithState[BatchStateV1, BatchStateV1](
+        OutputMode.Append, GroupStateTimeout.NoTimeout) {
+        (_: String, batch: Iterator[Evt], state: GroupState[BatchStateV1]) =>
+          batch.foreach { e =>
+            val sec = e.ts.getTime / 1000
+            val s = state.getOption.getOrElse(
+              BatchStateV1(0, e.event_id, e.event_id, sec, sec, 0L))
+            state.update(s.copy(n = s.n + 1, last_id = e.event_id, last_s = sec))
+          }
+          Iterator.empty
+      }
+      .writeStream.format("noop").option("checkpointLocation", ckpt)
+      .outputMode("append").start()
+    addLines(src, "b1.txt", (1 to 3).map(i => f"$i|2024-01-01 00:00:$i%02d"))
+    try q1.processAllAvailable() finally q1.stop()
+
+    addLines(src, "b2.txt", Seq("4|2024-01-01 00:00:04"))
+    val q2 = EventStream.batchFlush(rkSource(src), batchSize = 5, GapClose(60))
+      .writeStream.format("noop").option("checkpointLocation", ckpt)
+      .outputMode("append").start()
+    val err = try intercept[StreamingQueryException](q2.processAllAvailable())
+      finally q2.stop()
+    assert(err.getMessage.contains("STATE_STORE_VALUE_SCHEMA_NOT_COMPATIBLE"),
+      s"expected the state-schema check to refuse the old state, got: ${err.getMessage}")
+  }
 }
+
+/** BatchFlush's state shape before the one queue replay. */
+case class BatchStateV1(n: Int, first_id: Long, last_id: Long,
+    first_s: Long, last_s: Long, batches_closed: Long)

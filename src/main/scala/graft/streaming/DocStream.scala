@@ -8,7 +8,8 @@ import org.apache.spark.storage.StorageLevel
 /** One (band bucket, doc) occupancy row flowing into the stateful op.
   * `sig` is a primitive array (r22): the Seq[Int] encoder boxed every
   * signature element on the 4-rows-per-doc hot path. `ts` is the doc's
-  * event time under an [[EventTimeTtl]], else None. */
+  * event time under an [[EventTimeTtl]], else None (always None on a
+  * short doc's one row, whose `sig` is empty). */
 case class BandDoc(band_idx: Int, band_hash: Int, doc_id: Long,
     sig: Array[Int], ts: Option[java.sql.Timestamp] = None)
 
@@ -87,27 +88,44 @@ object DocStream {
     * lambda frames per document, the dominant map-side cost of the
     * streaming near-dup sink; MinHashSigSpec pins the kernel
     * bit-identical to it), no shuffle, streaming-safe. */
-  def withSignature(docs: DataFrame, n: Int = 3, k: Int = 16): DataFrame = {
-    val shingles = graft.functions.ShingleNGrams.column(
-      split(col("text"), " "), n)
-    docs.withColumn("sig",
-      graft.functions.MinHashSig.column(shingles, k))
-  }
+  def withSignature(docs: DataFrame, n: Int = 3, k: Int = 16): DataFrame =
+    docs.withColumn("sig", signature(split(col("text"), " "), n, k))
+
+  private def signature(words: Column, n: Int, k: Int): Column =
+    graft.functions.MinHashSig.column(
+      graft.functions.ShingleNGrams.column(words, n), k)
+
+  /** `band_idx` of a doc too short to have a signature: its one row
+    * judges nothing and writes no state. */
+  private final val ShortBand = -1
 
   /** Explode each doc into its `bands` LSH bucket rows — the band
     * structs come from TextDedup.bandStructs, the ONE definition of the
     * band-hash family, so stream and batch verdicts cannot drift.
-    * Column `tsCol` becomes each row's [[BandDoc]] `ts` — kept as the
-    * column itself, so its watermark reaches the stateful op. */
+    * Column `tsCol` becomes each row's [[BandDoc]] `ts`, keeping its
+    * watermark metadata, so the watermark reaches the stateful op.
+    *
+    * A NULL `sig` marks a doc too short to shingle: it becomes ONE row
+    * in bucket ([[ShortBand]], hash(doc_id)) with an empty signature
+    * and a NULL `ts` — the stateful op drops input rows behind the
+    * watermark, and a short doc keeps its verdict however late. */
   def bandRows(sigs: DataFrame, k: Int, bands: Int,
-      tsCol: Option[String] = None): DataFrame =
+      tsCol: Option[String] = None): DataFrame = {
+    val signed = col("sig").isNotNull
+    val ts = tsCol.fold(lit(null).cast("timestamp").as("ts"))(c =>
+      when(signed, col(c)).as("ts", sigs.schema(c).metadata))
+    val short = struct(lit(ShortBand).as("band_idx"),
+      hash(col("doc_id")).as("band_hash"))
     sigs
-      .select(col("doc_id"), col("sig"),
-        tsCol.fold(lit(null).cast("timestamp"))(col).as("ts"), explode(array(
-          graft.operators.TextDedup.bandStructs(k, bands): _*)).as("bs"))
+      .select(col("doc_id"),
+        coalesce(col("sig"), typedLit(Array.emptyIntArray)).as("sig"), ts,
+        explode(when(signed, array(
+          graft.operators.TextDedup.bandStructs(k, bands): _*))
+          .otherwise(array(short))).as("bs"))
       .select(col("bs.band_idx").as("band_idx"),
         col("bs.band_hash").as("band_hash"), col("doc_id"), col("sig"),
         col("ts"))
+  }
 
   /** Per-band verdicts via one flatMapGroupsWithState keyed on the band
     * bucket. "Earlier" means FIRST-SEEN in arrival order — the only
@@ -118,11 +136,12 @@ object DocStream {
     * When ids arrive in order (the batch-parity case) this is exactly
     * the batch miner's smaller-id-wins rule.
     *
-    * Docs shorter than the shingle size have NO signature (array_min
-    * over an empty gram set is NULL, which would kill the Seq[Int]
-    * encoder mid-query): they bypass the stateful op entirely with a
-    * not-a-dup verdict (band_idx -1) — a doc with no shingles cannot
-    * near-duplicate anything under this similarity.
+    * Docs shorter than the shingle size (or with NULL text) have NO
+    * signature: they take one [[ShortBand]] row through the same op,
+    * which gives it a not-a-dup verdict (band_idx -1) and writes no
+    * state — a doc with no shingles cannot near-duplicate anything
+    * under this similarity. One scan of the source per trigger, and
+    * one `split` per doc, shared by the signature and the length test.
     *
     * `ttl` bounds state AGE by event time, the production memory
     * backstop alongside the per-bucket size cap (VERDICT r7 #8). The
@@ -137,25 +156,24 @@ object DocStream {
       maxPerBucket: Int = 10000,
       ttl: Option[EventTimeTtl] = None): Dataset[BandVerdict] = {
     import docs.sparkSession.implicits._
-    val signed = withSignature(docs, n, k)
-    val sigged = ttl.fold(signed)(t => signed.withWatermark(t.tsCol, t.delay))
-    // coalesce: a NULL text must take the short path, not vanish from
-    // BOTH filter branches (null fails `cond` and `!cond` alike)
-    val hasSig = coalesce(size(split(col("text"), " ")) >= n, lit(false))
-    val short = sigged.filter(!hasSig)
-      .select(col("doc_id"), lit(-1).as("band_idx"),
-        lit(null).cast("long").as("dup_of"), lit(0.0).as("est_jaccard"))
-      .as[BandVerdict]
-    val rows = bandRows(sigged.filter(hasSig), k, bands, ttl.map(_.tsCol))
-      .as[BandDoc]
+    val marked = ttl.fold(docs)(t => docs.withWatermark(t.tsCol, t.delay))
+    val words = marked.select(Seq(col("doc_id"),
+      split(col("text"), " ").as("words")) ++ ttl.map(t => col(t.tsCol)): _*)
+    // coalesce: a NULL text is short, its signature NULL
+    val hasSig = coalesce(size(col("words")) >= n, lit(false))
+    val signed = words.withColumn("sig",
+      when(hasSig, signature(col("words"), n, k)))
+    val rows = bandRows(signed, k, bands, ttl.map(_.tsCol)).as[BandDoc]
     val timeout = if (ttl.isDefined) GroupStateTimeout.EventTimeTimeout
       else GroupStateTimeout.NoTimeout
-    val judged = rows
+    rows
       .groupByKey(r => (r.band_idx, r.band_hash))
       .flatMapGroupsWithState[BucketState, BandVerdict](
         OutputMode.Append, timeout) {
-        (_, batch: Iterator[BandDoc], state: GroupState[BucketState]) =>
-          if (state.hasTimedOut) {
+        (key, batch: Iterator[BandDoc], state: GroupState[BucketState]) =>
+          if (key._1 == ShortBand)
+            batch.map(r => BandVerdict(r.doc_id, ShortBand, None, 0.0))
+          else if (state.hasTimedOut) {
             state.remove()
             Iterator.empty
           } else {
@@ -182,7 +200,6 @@ object DocStream {
             verdicts.iterator
           }
       }
-    judged.union(short)
   }
 
   /** Per-bucket judge of [[nearDupVerdicts]] (r22 — the flat-array

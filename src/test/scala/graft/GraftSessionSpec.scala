@@ -31,7 +31,9 @@ class GraftSessionSpec extends AnyFunSuite {
       "spark.sql.sources.partitionOverwriteMode" -> "dynamic",
       "spark.sql.session.timeZone" -> "UTC",
       "spark.sql.legacy.parquet.nanosAsLong" -> "true",
-      "spark.sql.shuffle.partitions" -> "4"
+      "spark.sql.shuffle.partitions" -> "4",
+      "spark.hadoop.fs.file.impl" -> "graft.ForkFreeLocalFileSystem",
+      "spark.hadoop.fs.AbstractFileSystem.file.impl" -> "graft.ForkFreeLocalFs"
     ).foreach { case (k, v) => assert(s.conf.get(k) == v, k) }
   }
 

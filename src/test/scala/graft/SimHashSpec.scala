@@ -12,6 +12,7 @@ object SparkTest {
     .config("spark.sql.shuffle.partitions", 4)
     .config("spark.sql.session.timeZone", "UTC")
     .config("spark.ui.enabled", "false")
+    .config(GraftSession.localFs)
     .getOrCreate()
 
   /** Session with GraftExtensions installed (optimizer rule + planner

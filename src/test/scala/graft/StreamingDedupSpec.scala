@@ -122,6 +122,39 @@ class StreamingDedupSpec extends AnyFunSuite {
     assert(spark.table("dedup_short").filter(col("dup_of").isNotNull).count() == 0)
   }
 
+  test("one source scan per trigger: numInputRows is the docs offered, " +
+    "short docs write no state and keep their verdict however late") {
+    implicit val sql = spark.sqlContext
+    def ts(sec: Long) = new java.sql.Timestamp(sec * 1000L)
+    val long = (1 to 12).map(i => s"w$i").mkString(" ")
+    val in = MemoryStream[(Long, String, java.sql.Timestamp)]
+    val verdicts = DocStream.nearDupVerdicts(
+      in.toDF().toDF("doc_id", "text", "ts"), n = 3, k = 16, bands = 4,
+      tau = 0.5, ttl = Some(EventTimeTtl(tsCol = "ts",
+        delay = "0 seconds", ttlMs = 100000L)))
+    val q = verdicts.writeStream.outputMode("append")
+      .format("memory").queryName("dedup_one_scan").start()
+    try {
+      in.addData(Seq((1L, long, ts(500)), (2L, "too short", ts(500)),
+        (3L, null, ts(500))))
+      q.processAllAvailable()
+      val first = q.recentProgress.filter(_.numInputRows > 0)
+      assert(first.map(_.numInputRows).toSeq == Seq(3L))
+      // the one long doc fills one bucket per band; short docs none
+      assert(q.lastProgress.stateOperators.map(_.numRowsTotal).sum == 4L)
+      // the watermark is now 500 s: a short doc from 100 s is late,
+      // yet still gets its one not-a-dup verdict
+      in.addData(Seq((4L, "late", ts(100)))); q.processAllAvailable()
+      assert(q.recentProgress.map(_.numInputRows).sum == 4L)
+      assert(q.lastProgress.stateOperators.map(_.numRowsTotal).sum == 4L)
+    } finally q.stop()
+    val rows = spark.table("dedup_one_scan")
+      .select("doc_id", "band_idx").collect()
+      .map(r => (r.getLong(0), r.getInt(1))).toSeq
+    assert(rows.groupBy(_._1).view.mapValues(_.map(_._2).sorted).toMap ==
+      Map(1L -> Seq(0, 1, 2, 3), 2L -> Seq(-1), 3L -> Seq(-1), 4L -> Seq(-1)))
+  }
+
   test("decisions: doc-level keep/drop from band verdicts") {
     implicit val sql = spark.sqlContext
     val base = "alpha beta gamma delta epsilon zeta eta theta iota kappa " * 3
